@@ -1043,10 +1043,11 @@ def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: str) -> DataFrame
     # dot fold per row per round — k²/2 → k folds, the dominant CPU
     # term at corpus scale. Each round's frame is a lazy localCheckpoint
     # materialized by that round's own argmax job (same k-job profile
-    # as before; the checkpoint write is one (id, vec, sd, md) row —
-    # cheap next to the i dot folds it replaces). Chosen ids are
-    # filtered out cumulatively, one per round — the same exclusion set
-    # the old ~isin(all chosen) rebuilt each round.
+    # as before; the checkpoint writes one row per corpus row per round,
+    # each (id, vec, sd, md) — cheap next to the i dot folds it
+    # replaces). Chosen ids are filtered out cumulatively, one per round
+    # — the same exclusion set the old ~isin(all chosen) rebuilt each
+    # round.
     cur = pts
     for rnd in range(1, k):
         new_id, new_vec = chosen[-1][0], chosen[-1][1]

@@ -148,6 +148,12 @@ def widen_narrow_scan(df, min_parallelism: int | None = None):
     shuffled are small by the same condition. Results are unaffected:
     every operator in this library is partition-order-independent by
     the determinism discipline (the oracle gate re-proves it per entry).
+
+    Rule for callers: an input that comes after a shuffle (its plan
+    holds an Exchange) must be a small reduced stream — distinct words,
+    grouped aggregates. Its partition count is decided by AQE at run
+    time, so it is repartitioned unconditionally, and the round-robin
+    shuffle is only cheap because the stream is small.
     """
     sc = df.sparkSession.sparkContext
     target = int(min_parallelism or sc.defaultParallelism)

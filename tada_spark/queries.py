@@ -1720,10 +1720,13 @@ WHERE jaccard >= 0.35
 
 def near_dup_components(spark, sf):
     """Connected components over the Jaccard near-dup pair graph
-    (functions/dedup.connected_components): min-label propagation in
-    DataFrame algebra, the clustering step that turns pairwise near-dups
-    into keep-one-per-cluster decisions. Oracle: recursive-CTE
-    transitive closure over the identical pair set.
+    (functions/dedup.connected_components): min-label propagation, the
+    clustering step that turns pairwise near-dups into
+    keep-one-per-cluster decisions. The graph fits under the broadcast
+    limit at every SF here, so the rounds run on the driver after one
+    bounded Arrow collect of the pairs; the distributed DataFrame loop
+    takes over above it. Oracle: recursive-CTE transitive closure over
+    the identical pair set.
 
     The pair GENERATION here is all-pairs Jaccard within a deterministic
     20% doc sample — all-pairs verify is quadratic in block size (the

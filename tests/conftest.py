@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -15,3 +17,23 @@ def spark() -> SparkSession:
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+# connected_components runs on the driver when the pair list fits under
+# spark.sql.autoBroadcastJoinThreshold, and in the distributed loop
+# otherwise; a threshold of -1 forces the loop.
+CC_PATHS = ("driver", "distributed")
+
+
+@contextmanager
+def cc_path(spark: SparkSession, path: str):
+    """Run connected_components on one of CC_PATHS inside the block;
+    the broadcast threshold is restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    if path == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)

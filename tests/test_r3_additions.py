@@ -16,6 +16,8 @@ from pyspark.sql import types as T
 
 from tada_spark.plans.semantics import canon_str, py_canon
 
+from conftest import CC_PATHS, cc_path
+
 # ---------------------------------------------------------------------------
 # canon: TIMESTAMP_NTZ joins the LTZ branch (RFC3339 rendering)
 # ---------------------------------------------------------------------------
@@ -221,28 +223,87 @@ def test_session_stats_batch_mode(spark):
 def test_connected_components_chain_and_pair(spark):
     """Chain 1-2-3 collapses to one component (pairwise keep-min would
     wrongly delete both 2 and 3); 10-11 is separate; convergence stops
-    early."""
+    early. Both paths."""
     from tada_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    got = {r["node"]: (r["component"], r["keep"]) for r in connected_components(pairs).collect()}
-    assert got == {
-        1: (1, True),
-        2: (1, False),
-        3: (1, False),
-        10: (10, True),
-        11: (10, False),
-    }
+    for path in CC_PATHS:
+        with cc_path(spark, path):
+            got = {
+                r["node"]: (r["component"], r["keep"])
+                for r in connected_components(pairs).collect()
+            }
+        assert got == {
+            1: (1, True),
+            2: (1, False),
+            3: (1, False),
+            10: (10, True),
+            11: (10, False),
+        }, path
 
 
 def test_connected_components_no_convergence_raises(spark):
     from tada_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(pairs, max_iter=0)
+    for path in CC_PATHS:
+        with cc_path(spark, path), pytest.raises(RuntimeError, match="no convergence"):
+            connected_components(pairs, max_iter=0)
+
+
+@pytest.mark.parametrize("path", CC_PATHS)
+@pytest.mark.parametrize(
+    "rows,id_type,want",
+    [
+        # a NULL id is its own node with a NULL label; no label flows
+        # through it, so 2 and 5 stay in different components
+        (
+            [(1, 2), (2, None), (None, 5), (5, 6)],
+            "bigint",
+            {(1, 1, True), (2, 1, False), (5, 5, True), (6, 5, False), (None, None, None)},
+        ),
+        (
+            [("b", "a"), ("c", "b"), ("x", "y")],
+            "string",
+            {("a", "a", True), ("b", "a", False), ("c", "a", False), ("x", "x", True), ("y", "x", False)},
+        ),
+    ],
+    ids=["null_ids", "string_ids"],
+)
+def test_connected_components_null_and_string_ids(spark, path, rows, id_type, want):
+    """Both paths return exactly these rows, in the same schema."""
+    from tada_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
+    with cc_path(spark, path):
+        out = connected_components(pairs)
+        got = [tuple(r) for r in out.collect()]
+    assert sorted(got, key=str) == sorted(want, key=str)
+    assert out.schema.simpleString() == (
+        f"struct<node:{id_type},component:{id_type},keep:boolean>"
+    )
+
+
+def test_connected_components_driver_path_job_count(spark):
+    """The driver path collects the pairs in one job and hands back an
+    Arrow-built frame: connected components plus collect() on the
+    3-edge graph runs at most 2 jobs (the distributed loop runs ~20)."""
+    from tada_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
+    )
+    sc = spark.sparkContext
+    group = "cc_driver_path_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(connected_components(pairs).collect()) == 5
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
 def test_contamination_hits(spark):

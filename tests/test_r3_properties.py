@@ -11,6 +11,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import CC_PATHS, cc_path
+
 # ---------------------------------------------------------------------------
 # merge_session_batch ≡ single-pass session count over the sorted stream
 # ---------------------------------------------------------------------------
@@ -102,14 +104,16 @@ def test_connected_components_equals_union_find(spark, seed):
         for a, b in rng.integers(0, n_nodes, size=(n_edges, 2))
         if a != b
     ]
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            spark.createDataFrame(pairs, ["id_a", "id_b"])
-        ).collect()
-    }
     want = _union_find(pairs)
-    assert got == want
+    for path in CC_PATHS:
+        with cc_path(spark, path):
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(
+                    spark.createDataFrame(pairs, ["id_a", "id_b"])
+                ).collect()
+            }
+        assert got == want, path
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,8 @@
 # accident.
 #
 # Usage: tools/battery.sh [--quick]
-#   --quick : pytest + sf0.001 gate + plan audit (skip sf0.01 + bench)
+#   --quick : pytest + sf0.001 gate + plan audit (skip sf0.01, the
+#             benchmark self-test and bench)
 #
 # Exit code: non-zero on the FIRST failing stage.
 set -u
@@ -36,6 +37,8 @@ run "plan audit (CARTESIAN/BNLJ/row-Python/exchanges/DUP_EXPR)" \
 if [ "$quick" -eq 0 ]; then
   run "oracle gate sf0.01 (driver SF, all entries)" \
       python tools/check_oracle.py --sf /root/testdata/sf0.01
+  run "benchmark self-test (perfbench, both workloads)" \
+      python3 perfbench/selftest.py
   echo "=== bench (sf0.1)"
   python bench.py || exit $?
 fi
