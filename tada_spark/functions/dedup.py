@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from tada_spark.functions.text import char_shingles, fingerprint, word_shingles
 from tada_spark.plans.semantics import round_det
+from tada_spark.session import local_frame
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -393,8 +394,7 @@ def _components_on_driver(
             T.StructField("keep", T.BooleanType(), nullable),
         ]
     )
-    out = pa.table({"node": nodes, "component": comp, "keep": pc.equal(nodes, comp)})
-    return pairs.sparkSession.createDataFrame(out, schema)
+    return local_frame(pairs.sparkSession, schema, [nodes, comp, pc.equal(nodes, comp)])
 
 
 def connected_components(

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tada_spark.plans.semantics import round_det
+from tada_spark.session import local_frame
 from pyspark.sql.window import Window
 
 
@@ -991,11 +993,16 @@ def kcenter_select(
     spark = corpus.sparkSession
     # the id keeps ITS OWN type — hardcoding long crashed string ids
     # (CAST_INVALID_INPUT under ANSI) though the siblings accept any
-    id_type = dict(corpus.dtypes)[id_col]
-    out_schema = f"sel_order int, {id_col} {id_type}, maxmin_d2_e6 long"
+    out_schema = T.StructType(
+        [
+            T.StructField("sel_order", T.IntegerType()),
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            T.StructField("maxmin_d2_e6", T.LongType()),
+        ]
+    )
     if k <= 0:
         # a zero-size coreset is zero rows, not the seed row (r8 ADVICE)
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, out_schema, [[], [], []])
     # the filtered/cast corpus is re-scanned by every one of the k
     # argmax jobs — cache it once instead of recomputing from source
     # k times (r8 ADVICE); the try/finally guarantees the unpersist
@@ -1007,12 +1014,12 @@ def kcenter_select(
         pts.unpersist()
 
 
-def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: str) -> DataFrame:
+def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: T.StructType) -> DataFrame:
     seed_rows = pts.orderBy("__kid__").limit(1).collect()
     if not seed_rows:
         # empty corpus: zero rows, like the oracle's LIMIT 1 over
         # nothing — not a driver-side IndexError
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, out_schema, [[], [], []])
     first = seed_rows[0]
     chosen: list[tuple[int, list[float], int | None]] = [(first["__kid__"], list(first["__kv__"]), None)]
 
@@ -1080,8 +1087,10 @@ def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: str) -> DataFrame
         chosen.append((top["id"], list(top["vec"]), -top["nd"]))
     # the result is built from driver-side literals, so the caller's
     # finally-unpersist cannot invalidate it
-    return spark.createDataFrame(
-        [(i, cid, d) for i, (cid, _v, d) in enumerate(chosen)], out_schema
+    return local_frame(
+        spark,
+        out_schema,
+        [list(range(len(chosen))), [c[0] for c in chosen], [c[2] for c in chosen]],
     )
 
 

@@ -16,8 +16,10 @@ from functools import reduce as _reduce
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tada_spark.frame import Frame
+from tada_spark.session import local_frame
 
 LEVEL_SEP = "|"
 
@@ -99,15 +101,15 @@ def promote_to_col_level(frame: Frame, name: str, value_col: str) -> Frame:
 
 def make_multilevel_labels(spark: SparkSession, levels: dict[str, list]) -> Frame:
     """Cartesian product of label slices (reference
-    dataframe.go:20-65) via crossJoin of distinct level values."""
+    dataframe.go:20-65) via crossJoin of distinct level values; each
+    level is an Arrow local relation of one nullable string column."""
     frames = []
     for name, values in levels.items():
         # labels are stringly-typed (reference accepts arbitrary slices);
         # stringify so int/date level values don't fail schema checks
+        schema = T.StructType([T.StructField(name, T.StringType())])
         frames.append(
-            spark.createDataFrame(
-                [(str(v) if v is not None else None,) for v in values], f"`{name}` string"
-            )
+            local_frame(spark, schema, [[str(v) if v is not None else None for v in values]])
         )
     df = _reduce(lambda a, b: a.crossJoin(b), frames)
     return Frame(df, labels=list(levels))

@@ -20,6 +20,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tada_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -53,7 +56,15 @@ def expect_regex(column: str, pattern: str) -> Expectation:
     return Expectation("regex", column, F.col(column).rlike(pattern))
 
 
-REPORT_SCHEMA = "rule string, column_name string, n_violations long, n_checked long, ok boolean"
+REPORT_SCHEMA = T.StructType(
+    [
+        T.StructField("rule", T.StringType()),
+        T.StructField("column_name", T.StringType()),
+        T.StructField("n_violations", T.LongType()),
+        T.StructField("n_checked", T.LongType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
 
 
 def validate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
@@ -62,7 +73,7 @@ def validate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     rule list returns an empty report, not an error (rules often come
     from config)."""
     if not expectations:
-        return df.sparkSession.createDataFrame([], REPORT_SCHEMA)
+        return local_frame(df.sparkSession, REPORT_SCHEMA, [[]] * len(REPORT_SCHEMA))
     aggs: list[Column] = []
     for i, e in enumerate(expectations):
         c = F.col(e.column)

@@ -10153,6 +10153,7 @@ def cms_probe_unseen_users(spark, sf):
     100 TB shape: identical to the heavy-hitters entry — one bounded
     explode+agg for the sketch, 8-row probe side, broadcast join."""
     from tada_spark.functions import sketches
+    from tada_spark.session import local_frame
 
     ev = load(spark, sf, "events").to_df().filter(F.col("user_id").isNotNull())
     sk = sketches.cms_build(ev, F.col("user_id"), depth=4, width=256)
@@ -10162,8 +10163,10 @@ def cms_probe_unseen_users(spark, sf):
         .orderBy(F.col("user_id").asc())
         .limit(5)
     )
-    absent = spark.createDataFrame(
-        [(-101, 0), (-102, 0), (-103, 0)], "user_id long, true_n long"
+    absent = local_frame(
+        spark,
+        T.StructType([T.StructField("user_id", T.LongType()), T.StructField("true_n", T.LongType())]),
+        [[-101, -102, -103], [0, 0, 0]],
     )
     probes = present.unionByName(absent)
     est = sketches.cms_estimate(probes, sk, "user_id", depth=4, width=256)

@@ -11,6 +11,9 @@ one you'd also want on a 1000-executor cluster:
   * shuffle.partitions sized to cores locally; on a real cluster AQE
     coalesces from a deliberately-high initial number, so we set the
     initial high and let AQE shrink.
+
+``local_frame`` turns driver-held values into a DataFrame through Arrow,
+so small frames built on the driver never start Python workers.
 """
 
 from __future__ import annotations
@@ -42,3 +45,21 @@ def get_spark(app_name: str = "tada_spark", cpus: int | None = None) -> SparkSes
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema, columns):
+    """Driver-held columns → DataFrame through one Arrow table.
+
+    ``schema`` is a ``StructType``; ``columns`` holds one sequence per
+    field (Python values or pyarrow arrays), converted to the field's
+    Arrow type. The frame is a local relation (``LocalTableScan``), so
+    no action on it starts a Python worker, which a list of tuples
+    passed to ``createDataFrame`` would (a ``PythonRDD`` scan)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    if len(columns) != len(arrow_schema):
+        raise ValueError(f"local_frame: {len(columns)} columns for {len(arrow_schema)} fields")
+    arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

@@ -97,7 +97,12 @@ def frame_from_json(spark: SparkSession, payload: str) -> Frame:
 
 def read_matrix(spark: SparkSession, matrix, col_names: list[str] | None = None) -> Frame:
     """2-D numeric array (numpy / nested lists) → all-float64 Frame
-    (reference MatrixReader io.go:505-532)."""
+    (reference MatrixReader io.go:505-532), built as an Arrow local
+    relation of nullable double columns (no Python worker runs)."""
+    from pyspark.sql import types as T
+
+    from tada_spark.session import local_frame
+
     # NaN → NULL like every other reader (reference options.go:18 —
     # from_pandas and the record readers already normalize; a matrix
     # cell must not be the one place NaN leaks through)
@@ -108,5 +113,7 @@ def read_matrix(spark: SparkSession, matrix, col_names: list[str] | None = None)
     if not data:
         raise ValueError("read_matrix: empty matrix")
     names = col_names or [str(i) for i in range(len(data[0]))]
-    df = spark.createDataFrame([tuple(r) for r in data], schema=", ".join(f"`{n}` double" for n in names))
-    return Frame(df)
+    if any(len(r) != len(names) for r in data):
+        raise ValueError(f"read_matrix: every row must have {len(names)} values, one per column")
+    schema = T.StructType([T.StructField(n, T.DoubleType()) for n in names])
+    return Frame(local_frame(spark, schema, [[r[j] for r in data] for j in range(len(names))]))

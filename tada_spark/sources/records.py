@@ -6,6 +6,12 @@ majority-votes Float64/DateTime/Date/String (reference
 internal.go:844-892). These are small-data constructors (test authoring,
 interop) — the 100 TB path is parquet; nothing here appears in an
 operator hot path.
+
+read_records builds its frame as an Arrow local relation
+(``session.local_frame``): the plan is a ``LocalTableScan`` and no
+Python worker runs when it executes. write_records selects columns by
+position, so any name the reader accepts (dots, backticks, duplicates)
+writes back unchanged.
 """
 
 from __future__ import annotations
@@ -64,7 +70,17 @@ def read_records(
     infer_types: bool = False,
     blank_as_null: bool = False,
 ) -> Frame:
-    """[][]string → Frame (reference io.go:213-268)."""
+    """[][]string → Frame (reference io.go:213-268).
+
+    Every cell is a ``str`` or None; any other cell raises TypeError
+    naming its data row and column (no rendering is guessed for it).
+    Cells in the null-string set (plus "" with ``blank_as_null``) read
+    as NULL. The frame is an Arrow local relation of nullable string
+    columns: a ``LocalTableScan``, so no Python worker runs."""
+    from pyspark.sql import types as T
+
+    from tada_spark.session import local_frame
+
     if not records:
         raise ValueError("read_records: must have at least one record")
     if by_column:
@@ -89,10 +105,17 @@ def read_records(
         if not headers or not names[i]:
             names[i] = f"*{i}"
 
+    for i, r in enumerate(data):
+        for j, v in enumerate(r):
+            if v is not None and not isinstance(v, str):
+                raise TypeError(
+                    f"read_records: data row {i}, column {j} ({names[j]!r}) holds "
+                    f"{type(v).__name__} {v!r}, not str"
+                )
     nulls = set(NULL_STRINGS) | ({""} if blank_as_null else set())
-    py_rows = [tuple(None if v in nulls else v for v in r) for r in data]
-    df = spark.createDataFrame(py_rows, schema=", ".join(f"`{n}` string" for n in names))
-    f = Frame(df, labels=names[:label_levels])
+    columns = [[None if r[j] in nulls else r[j] for r in data] for j in range(width)]
+    schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    f = Frame(local_frame(spark, schema, columns), labels=names[:label_levels])
     if infer_types:
         casts = {}
         for i, n in enumerate(names):
@@ -141,9 +164,11 @@ def write_records(frame: Frame, *, include_labels: bool = True) -> list[list[str
     """Frame → [][]string with nulls as "(null)" (reference
     io.go:271-299). Driver-side sink — test/interop scale only."""
     df = frame.to_df()
-    cols = frame.columns if include_labels else frame.value_columns
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    out = df.select(*[canon_str(F.col(c), fields[c]).alias(c) for c in cols]).collect()
-    header = [list(cols)]
+    fields = df.schema.fields
+    keep = [i for i, f in enumerate(fields) if include_labels or f.name not in frame.labels]
+    # positional names: F.col would split "a.b" and refuse a duplicate
+    pos = df.toDF(*[f"_{i}" for i in range(len(fields))])
+    out = pos.select(*[canon_str(F.col(f"_{i}"), fields[i].dataType) for i in keep]).collect()
+    header = [[fields[i].name for i in keep]]
     body = [[NULL_OUT if v == "\x00null" else v for v in row] for row in out]
     return header + body
