@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tada_spark.functions.text import char_shingles, fingerprint, word_shingles
-from tada_spark.plans.semantics import round_det
+from tada_spark.plans.semantics import iterate, pin, round_det, unpin
 from tada_spark.session import local_frame
 
 
@@ -425,26 +425,21 @@ def connected_components(
     _components_on_driver). A near-dup graph is tiny next to its
     corpus: near_dup_components at sf0.01 (114 pairs, 60 nodes, 4
     rounds) builds in 9 jobs and 2 checkpoints this way, against 35
-    jobs and 8 checkpoints through the loop below. A threshold <= 0
+    jobs and 7 checkpoints through the loop below. A threshold <= 0
     disables this path, as it disables broadcast joins; integer and
     string ids only. Above the cap the bounded collect is one wasted
     pass over the pair plan before the loop starts.
 
     Distributed path, for larger edge sets, in DataFrame algebra: each
-    round is one shuffle over the edge list plus a label join; each
-    round's labels are localCheckpointed (lineage cut) and superseded
-    checkpoints are released by Spark's ContextCleaner once rebinding
-    drops the last reference. Convergence is
-    checked with a count of changed labels — O(diameter) actions total,
-    the standard Spark shape for iterative algorithms.
-
-    r12 round shape (guide §2.2): the changed flag is computed IN the
-    label pass (nmin < label — exactly the rows the old new-vs-old
-    self-join found) and the per-round checkpoint is lazy, so the
-    convergence count is the action that materializes it: ONE job per
-    round instead of a checkpoint job plus a compare-join job.
-    Measured at sf0.1 (1.5k-node near-dup graph, 5 rounds): iteration
-    6.0 → 2.9 s, rounds 0.95-1.3 → 0.42-0.6 s. (Pointer jumping was
+    round is one shuffle over the edge list plus a label join, run by
+    ``iterate``: it holds the edge cache and at most two rounds' pins,
+    the result holds the last round's pin, and a raise holds nothing.
+    The changed flag is computed IN the label pass (nmin < label), so
+    the count of changed labels is the round's one action and
+    materializes its lazy pin: ONE job per round, O(diameter) in all.
+    Against a checkpoint job plus a compare-join job per round, at
+    sf0.1 (1.5k-node near-dup graph, 5 rounds): iteration 6.0 → 2.9 s,
+    rounds 0.95-1.3 → 0.42-0.6 s. (Pointer jumping was
     tried and rejected: near-dup components are dense blobs, the round
     count didn't drop and the label-of-label join made rounds slower.)
     """
@@ -457,47 +452,34 @@ def connected_components(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     ).distinct()
     edges.cache()
-    # localCheckpoint (eager) per iteration, NOT cache: each round's plan
-    # would otherwise nest the previous round's full lineage — after k
-    # iterations the logical plan is exponentially large, which blows up
-    # optimizer time (and any plan introspection) long before data size
-    # matters. Lineage truncation is the standard posture for iterative
-    # DataFrame algorithms.
-    try:
-        labels = (
-            edges.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint()
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        # min neighbor label per node, then min with own label
+        neigh = (
+            edges.join(labels, edges.src == labels.node)
+            .select(F.col("dst").alias("node"), "label")
+            .groupBy("node")
+            .agg(F.min("label").alias("nmin"))
         )
-        for _ in range(max_iter):
-            # min neighbor label per node, then min with own label
-            neigh = (
-                edges.join(labels, edges.src == labels.node)
-                .select(F.col("dst").alias("node"), "label")
-                .groupBy("node")
-                .agg(F.min("label").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neigh, "node", "left")
-                .select(
-                    "node",
-                    F.least("label", "nmin").alias("label"),
-                    # label shrank iff some neighbor's label beat ours;
-                    # NULL nmin (isolated this round) compares NULL →
-                    # dropped by the filter below, i.e. unchanged
-                    (F.col("nmin") < F.col("label")).alias("__chg__"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = new_labels.filter(F.col("__chg__")).count()
-            labels = new_labels.drop("__chg__")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components: no convergence in {max_iter} iters"
-            )
+        return labels.join(neigh, "node", "left").select(
+            "node",
+            F.least("label", "nmin").alias("label"),
+            # label shrank iff some neighbor's label beat ours; NULL
+            # nmin (isolated this round) compares NULL → dropped by the
+            # convergence filter, i.e. unchanged
+            (F.col("nmin") < F.col("label")).alias("__chg__"),
+        )
+
+    try:
+        labels, converged = iterate(
+            edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
+            step,
+            rounds=max_iter,
+            until=lambda labels: labels.filter(F.col("__chg__")).count() == 0,
+        )
+        if not converged:
+            unpin(labels)
+            raise RuntimeError(f"connected_components: no convergence in {max_iter} iters")
     finally:
         edges.unpersist()
     return labels.select(
@@ -746,13 +728,12 @@ def jaccard_pairs(
     # each consumer re-evaluates the window function and the
     # projections above it, and iterative consumers
     # (connected_components) re-derive the whole lineage per round.
-    # The two lazy localCheckpoints pin the window output and the
-    # shingle table once per invocation (recomputed every run —
-    # nothing persists across runs). Measured at sf0.1: jaccard alone
+    # Two lazy pins hold the window output and the shingle table once
+    # per invocation. Measured at sf0.1: jaccard alone
     # 25.6→24.2 s (intersects dominate), but near_dup_components —
     # which iterates over this plan — dropped 43.3→27.8 s (−36%)
     # (OPTIMIZATION_r12.md).
-    docs = docs.withColumn("rep", F.min("jid").over(grp)).localCheckpoint(eager=False)
+    docs = pin(docs.withColumn("rep", F.min("jid").over(grp)))
     members = docs.select("jid", "rep")
     spark = df.sparkSession
     par = max(int(spark.sparkContext.defaultParallelism), 1)
@@ -816,14 +797,13 @@ def jaccard_pairs(
             if blocks
             else sh.crossJoin(F.broadcast(cnts))
         )
-    sh = (
+    sh = pin(
         sh.withColumn("__sfac__", sfac.cast("int"))
         .withColumn(
             "__hsalt__",
             F.pmod(F.xxhash64(F.col("jid")), F.col("__sfac__")).cast("int"),
         )
         .drop("__bcnt__")
-        .localCheckpoint(eager=False)
     )
     # fragment-replicate salt for the pairwise verify (r12, guide §2.5):
     # blocked on low-cardinality keys (e.g. 5 langs) the self-join's
@@ -1229,12 +1209,12 @@ def source_overlap(
     # subtrees (both pair-join sides and the per-source counts); under
     # AQE each re-ran the scan + shingle explode + distinct shuffle
     # (no cross-stage exchange reuse — see _banded_pairs). One lazy
-    # localCheckpoint computes it once per invocation. Widened first
+    # pin computes it once per invocation. Widened first
     # (r12): the 16-gram explode above the distinct's shuffle is the
     # CPU floor here and runs serially on a single-split scan.
     from tada_spark.operators.layout import widen_narrow_scan
 
-    sh = (
+    sh = pin(
         widen_narrow_scan(df).filter(F.length(F.trim(F.col(text_col))) > 0)
         .select(
             F.col(group_col).alias("src"),
@@ -1242,7 +1222,6 @@ def source_overlap(
         )
         .filter(F.col("g").isNotNull() & (F.col("g") != ""))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     counts = sh.groupBy("src").agg(F.count("*").alias("n"))
     a = sh.select(F.col("src").alias("source_a"), "g")
@@ -1368,28 +1347,27 @@ def pagerank_quantized(
 
     100 TB shape: per round, one edge-keyed equi-join (rank table onto
     the edge list) + one dst-keyed hash-agg — the standard Pregel-style
-    DataFrame iteration; localCheckpoint per round cuts the
-    exponentially-nesting lineage (connected_components discipline).
-    Plan growth per round is O(1) after the cut.
+    DataFrame iteration, each round an eager pin run by ``iterate``.
+    Held: the edge pin plus at most two rank pins in the loop, then the
+    returned rank pin alone (the edge pin when ``iters`` is 0). Executor
+    loss mid-loop fails the call unless a checkpoint dir is set
+    (``sc.setCheckpointDir``), which makes the pins reliable.
     """
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = fwd.union(
+    edges = pin(fwd.union(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ).distinct().localCheckpoint()
+    ).distinct(), eager=True)
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     n = deg.groupBy().agg(F.count("*").alias("n_nodes"))
     s15 = (scale * 15) // 100
-    ranks = (
-        deg.crossJoin(F.broadcast(n))
-        .select(
-            F.col("src").alias("node"),
-            "deg",
-            F.floor(F.lit(scale).cast("long") / F.col("n_nodes")).cast("long").alias("rank"),
-            F.floor(F.lit(s15).cast("long") / F.col("n_nodes")).cast("long").alias("base"),
-        )
-        .localCheckpoint()
+    ranks = deg.crossJoin(F.broadcast(n)).select(
+        F.col("src").alias("node"),
+        "deg",
+        F.floor(F.lit(scale).cast("long") / F.col("n_nodes")).cast("long").alias("rank"),
+        F.floor(F.lit(s15).cast("long") / F.col("n_nodes")).cast("long").alias("base"),
     )
-    for _ in range(iters):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         inc = (
             edges.join(ranks, edges["src"] == ranks["node"])
             .select(
@@ -1402,21 +1380,23 @@ def pagerank_quantized(
             .agg(F.sum("c").alias("inc"))
         )
         kept = ranks.select("node", "deg", "base")
-        ranks = (
-            kept.join(inc, kept["node"] == inc["dst"])
-            .select(
-                "node",
-                "deg",
-                "base",
-                (
-                    F.col("base")
-                    + F.floor((F.lit(85).cast("long") * F.col("inc")) / F.lit(100).cast("long")).cast(
-                        "long"
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
+        return kept.join(inc, kept["node"] == inc["dst"]).select(
+            "node",
+            "deg",
+            "base",
+            (
+                F.col("base")
+                + F.floor((F.lit(85).cast("long") * F.col("inc")) / F.lit(100).cast("long")).cast(
+                    "long"
+                )
+            ).alias("rank"),
         )
+
+    try:
+        ranks, _ = iterate(ranks, step, rounds=iters)
+    finally:
+        if iters:  # the rounds' pins no longer read the edge list
+            unpin(edges)
     return ranks.select("node", "deg", F.col("rank").alias("pagerank_e9"))
 
 
@@ -1496,8 +1476,8 @@ def domain_boilerplate_removal(
     filters), then (domain, line)- and domain-keyed COUNT DISTINCT
     aggregates and an order-preserving per-doc rebuild (array_sort on
     (pos, line) structs). The line stream feeds four consumers; it is
-    staged with a lazy localCheckpoint (the daily_ingest checkpoint
-    pattern) so the scan + split + explode runs once per invocation,
+    staged with a lazy pin (the daily_ingest pattern) so the scan +
+    split + explode runs once per invocation,
     and a web-scale run keys the aggregates on md5(line) instead of
     the raw line string."""
     # NULL guards (r12 review): a NULL domain would fail every equi-join
@@ -1510,18 +1490,15 @@ def domain_boilerplate_removal(
     # dom_docs, the kept join-back, raw) whose downstream exchanges all
     # differ — AQE stage reuse unifies none of them, so the scan +
     # split + posexplode ran four times per invocation (plan before:
-    # FileScan ×4, 10 live exchanges). The lazy localCheckpoint pins
-    # the exploded line table once per invocation (recomputed every
-    # run — nothing persists across runs); the docstring's "a
-    # production ingest pipeline materializes the line table between
-    # stages" is now what the operator itself does.
-    lines = df.select(
+    # FileScan ×4, 10 live exchanges). A lazy pin holds the exploded
+    # line table once per invocation.
+    lines = pin(df.select(
         F.col(id_col),
         F.coalesce(F.col(domain_col), F.lit("")).alias("domain"),
         F.posexplode_outer(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
         ).alias("pos", "line"),
-    ).filter(F.col("pos").isNotNull()).localCheckpoint(eager=False)
+    ).filter(F.col("pos").isNotNull()))
     line_freq = lines.groupBy("domain", "line").agg(
         F.countDistinct(id_col).alias("nld")
     )

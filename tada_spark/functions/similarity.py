@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tada_spark.plans.semantics import round_det
+from tada_spark.plans.semantics import iterate, pin, round_det, unpin
 from tada_spark.session import local_frame
 from pyspark.sql.window import Window
 
@@ -268,7 +268,7 @@ def lsh_cosine_pairs(
         )
     # norm hoisted BEFORE the explode: one fold per vector, not per
     # (vector, table) row (the cosine_topk hoist discipline)
-    b = (
+    b = pin(
         df.select(
             F.col(id_col),
             F.col(vec_col),
@@ -282,7 +282,6 @@ def lsh_cosine_pairs(
             F.col("__tb__.t").alias("__t__"),
             F.col("__tb__.bucket").alias("bucket"),
         )
-        .localCheckpoint(eager=False)
     )
     a, c = b.alias("a").hint("shuffle_hash"), b.alias("b")
     return (
@@ -326,17 +325,15 @@ def lsh_cosine_candidates(
     Recall is tunable via number of planes / OR-ed tables."""
     # norm hoisted into the bucketed table (r12, see cosine_topk): one
     # fold per vector instead of two per candidate pair — quotient
-    # bit-identical. The eager=False localCheckpoint pins the bucket
-    # table once per invocation: the self-join's identical shuffle
-    # sides are AQE-reused anyway, but each OR-ed table otherwise
-    # replicates the plane-projection subtree through planning, and
-    # the checkpoint measured slightly faster and much more stable
-    # (3.62 s vs 3.80 s same-session, OPTIMIZATION_r12.md). Recomputed
-    # per invocation — nothing persists across runs.
-    b = (
+    # bit-identical. A lazy pin holds the bucket table once per
+    # invocation: the self-join's identical shuffle sides are
+    # AQE-reused anyway, but each OR-ed table otherwise replicates the
+    # plane-projection subtree through planning, and the pin measured
+    # slightly faster and much more stable (3.62 s vs 3.80 s
+    # same-session, OPTIMIZATION_r12.md).
+    b = pin(
         lsh_sign_buckets(df, planes, id_col=id_col, vec_col=vec_col)
         .withColumn("__n__", norm(F.col(vec_col)))
-        .localCheckpoint(eager=False)
     )
     a, c = b.alias("a").hint("shuffle_hash"), b.alias("b")
     return (
@@ -389,9 +386,8 @@ def kmeans_quantized(
     100 TB shape: centroids are k rows — broadcast each round onto the
     partitioned corpus (a 1-row-per-centroid nested loop is O(n·k), the
     correct plan); the update is one (cluster, dim) aggregate with
-    map-side partials; centroid lineage is cut per round with
-    localCheckpoint (k·dim values) so the plan stays O(1) across
-    iterations, like connected_components.
+    map-side partials; centroid lineage is cut per round with a pin
+    (k·dim values) so the plan stays O(1) across iterations.
     """
     q = df.select(
         F.col(id_col).alias("vid"),
@@ -399,16 +395,14 @@ def kmeans_quantized(
             F.col(vec_col), lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long")
         ).alias("v"),
     )
-    # lazy checkpoints (r13, the connected_components posture): each
-    # round's centroid table is k·dim values consumed ONLY by the next
-    # assign's broadcast build, which materializes it there — an eager
-    # checkpoint per round scheduled an extra blocking job per round
-    # for the same bytes. Lineage is still cut at every round.
-    cents = (
+    # lazy pins (r13): each round's centroid table is k·dim values
+    # consumed ONLY by the next assign's broadcast build, which
+    # materializes it there — an eager pin per round scheduled an extra
+    # blocking job per round for the same bytes.
+    cents = pin(
         q.orderBy("vid")
         .limit(k)
         .select(F.col("vid").alias("cid"), F.col("v").alias("cv"))
-        .localCheckpoint(eager=False)
     )
 
     def assign(cents_df, *, with_v: bool):
@@ -450,7 +444,7 @@ def kmeans_quantized(
         upd = dims.groupBy("cid", "dim").agg(
             F.floor(F.sum("val") / F.count("*") + F.lit(0.5)).cast("long").alias("cval")
         )
-        cents = (
+        cents = pin(
             upd.groupBy("cid")
             .agg(
                 F.transform(
@@ -458,7 +452,6 @@ def kmeans_quantized(
                     lambda s: s["cval"],
                 ).alias("cv")
             )
-            .localCheckpoint(eager=False)
         )
     assigned = assign(cents, with_v=False)
     return assigned.select(F.col("vid").alias(id_col), F.col("cid").alias("cluster"))
@@ -724,11 +717,11 @@ def semdedup(
     # exactly the shape AQE does NOT reuse (replanning strips the
     # inner shuffle, so the canonical stage forms differ) — so the
     # assignment + quantization + norm folds re-ran per consumer. The
-    # lazy localCheckpoint pins the working set (id, v, n2, cluster)
+    # lazy pin holds the working set (id, v, n2, cluster)
     # once per invocation — measured −5% at sf0.1 (the pairwise dot
     # fold dominates locally; at scale the staging removes two full
     # re-runs of the assignment pipeline — OPTIMIZATION_r12.md).
-    t = q.join(assigned.withColumnRenamed(id_col, "vid"), "vid").localCheckpoint(eager=False)
+    t = pin(q.join(assigned.withColumnRenamed(id_col, "vid"), "vid"))
     a = t.select("cluster", F.col("vid").alias("va"), F.col("v").alias("xa"), F.col("n2").alias("na"))
     b = t.select("cluster", F.col("vid").alias("vb"), F.col("v").alias("xb"), F.col("n2").alias("nb"))
     dot = F.aggregate(
@@ -968,11 +961,15 @@ def kcenter_select(
     re-read the filtered/cast frame instead of re-scanning source (the
     chosen set rides along as k literal vectors
     — never a join, never a collect of the corpus). Each round carries
-    a running min-d² column forward through a lazy localCheckpoint
-    (r13), so the loop folds ONE new dot product per row per round —
-    O(n·k) total distance work, not the O(n·k²) of rebuilding min-d²
-    to every chosen center each round. k is small by construction
-    (a coreset), so the k jobs are the honest cost."""
+    a running min-d² column forward through a lazy pin (r13), so the
+    loop folds ONE new dot product per row per round — O(n·k) total
+    distance work, not the O(n·k²) of rebuilding min-d² to every chosen
+    center each round. k is small by construction (a coreset), so the
+    k jobs are the honest cost. Each round's pin is a corpus copy;
+    ``iterate`` holds at most two beside the persisted frame, and none
+    once the call returns. Executor loss mid-loop fails the call unless
+    a checkpoint dir is set (``sc.setCheckpointDir``), which makes the
+    pins reliable."""
     from tada_spark.operators.layout import widen_narrow_scan
 
     # widen a narrow scan first (r12): the k argmax jobs each fold up
@@ -1048,28 +1045,21 @@ def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: T.StructType) -> 
     # e6 quantization happens AFTER the min, so least(md, d2_new) is
     # bit-identical to least(d2_0..d2_i)), cutting the loop to ONE new
     # dot fold per row per round — k²/2 → k folds, the dominant CPU
-    # term at corpus scale. Each round's frame is a lazy localCheckpoint
-    # materialized by that round's own argmax job (same k-job profile
-    # as before; the checkpoint writes one row per corpus row per round,
-    # each (id, vec, sd, md) — cheap next to the i dot folds it
-    # replaces). Chosen ids are filtered out cumulatively, one per round
-    # — the same exclusion set the old ~isin(all chosen) rebuilt each
-    # round.
-    cur = pts
-    for rnd in range(1, k):
-        new_id, new_vec = chosen[-1][0], chosen[-1][1]
-        d2_new = _d2_to(new_vec)
-        md = F.least(F.col("__md__"), d2_new) if rnd > 1 else d2_new
-        cur = (
-            cur.filter(F.col("__kid__") != F.lit(new_id))
-            .withColumn("__md__", md)
-            .localCheckpoint(eager=False)
-        )
+    # term at corpus scale. Each round's frame is a lazy pin that the
+    # round's argmax job materializes: one (id, vec, sd, md) row PER
+    # CORPUS ROW, a full corpus copy — cheap next to the i dot folds it
+    # replaces. Chosen ids are filtered out cumulatively, one per round.
+    def step(cur: DataFrame, i: int) -> DataFrame:
+        d2_new = _d2_to(chosen[-1][1])
+        md = F.least(F.col("__md__"), d2_new) if i else d2_new
+        return cur.filter(F.col("__kid__") != F.lit(chosen[-1][0])).withColumn("__md__", md)
+
+    def argmax(cur: DataFrame) -> bool:
         d2_e6 = F.floor(F.col("__md__") * F.lit(1e6) + F.lit(0.5)).cast("long")
         # argmax distance, tie → LOWEST id: min over (-d, id) — the
         # negation lives on the (always-numeric) distance, never the
         # id, so string ids order correctly too. On e6-floored ties
-        # (duplicate vectors) the cumulative id filter above keeps a
+        # (duplicate vectors) the cumulative id filter in step keeps a
         # chosen point from re-selecting forever.
         rows = (
             cur.select(
@@ -1082,11 +1072,14 @@ def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: T.StructType) -> 
             .collect()
         )
         if not rows or rows[0]["id"] is None:
-            break  # k exceeds the corpus: stop at n selections
-        top = rows[0]
-        chosen.append((top["id"], list(top["vec"]), -top["nd"]))
-    # the result is built from driver-side literals, so the caller's
-    # finally-unpersist cannot invalidate it
+            return True  # k exceeds the corpus: stop at n selections
+        chosen.append((rows[0]["id"], list(rows[0]["vec"]), -rows[0]["nd"]))
+        return False
+
+    cur, _ = iterate(pts, step, rounds=k - 1, until=argmax)
+    # the result is built from driver-side literals: neither the last
+    # round's pin nor the caller's persisted pts is read by it
+    unpin(cur)
     return local_frame(
         spark,
         out_schema,

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tada_spark.plans.semantics import round_det
+from tada_spark.plans.semantics import pin, round_det
 
 
 def ols_by_group(
@@ -1334,14 +1334,13 @@ def mutual_information(
     # marginals + the contribution probe). AQE reuses only the map
     # side of the shared (pair, x, y) exchange; each consumer re-ran
     # the reduce-side final aggregate and replicated the subtree
-    # through planning. The lazy localCheckpoint pins the
+    # through planning. The lazy pin holds the
     # ≤ Σ|X|·|Y|-row table once per invocation — measured −5% at
     # sf0.1 (small locally; the shared fact pass is the point at
     # scale — OPTIMIZATION_r12.md).
-    cells = (
+    cells = pin(
         base.groupBy("pair", "__x__", "__y__")
         .agg(F.count(F.lit(1)).alias("__nxy__"))
-        .localCheckpoint(eager=False)
     )
     mx = cells.groupBy("pair", "__x__").agg(F.sum("__nxy__").alias("__nx__"))
     my = cells.groupBy("pair", "__y__").agg(F.sum("__nxy__").alias("__ny__"))
@@ -1454,13 +1453,12 @@ def theil_sen_by_group(
     from pyspark.sql.window import Window
 
     spark = df.sparkSession
-    pts = (
+    # staged: feeds both self-join sides (b is a broadcast build —
+    # the AQE no-reuse shape), npts, and three probe passes
+    pts = pin(
         df.filter(x.isNotNull() & y.isNotNull() & F.col(group_col).isNotNull())
         .groupBy(F.col(group_col).alias("__g__"), x.cast("long").alias("__x__"))
         .agg(F.sum(y.cast("long")).alias("__y__"))
-        # staged: feeds both self-join sides (b is a broadcast build —
-        # the AQE no-reuse shape), npts, and three probe passes
-        .localCheckpoint(eager=False)
     )
     par = max(int(spark.sparkContext.defaultParallelism), 1)
     # explicit-numPartitions repartition: AQE never coalesces it, so
@@ -1483,7 +1481,7 @@ def theil_sen_by_group(
     # ≤65537 buckets (width ≥ 1, so a constant-slope group is bucket 0).
     # Integer div keeps the mapping exact and monotonic: s ↦ bucket
     # never reorders, so bucket-prefix counts ARE global rank bases.
-    gstats = (
+    gstats = pin(
         pairs.groupBy("__g__")
         .agg(
             F.min("__s_e6__").alias("__mn__"),
@@ -1493,7 +1491,6 @@ def theil_sen_by_group(
         .withColumn("__w__", F.expr("(__mx__ - __mn__) div 65536 + 1"))
         .withColumn("__rn1__", F.expr("(__np__ + 1) div 2"))
         .withColumn("__rn2__", F.expr("(__np__ + 2) div 2"))
-        .localCheckpoint(eager=False)
     )
     pb = pairs.join(F.broadcast(gstats), "__g__").withColumn(
         "__b__", F.expr("(__s_e6__ - __mn__) div __w__")
@@ -1507,7 +1504,7 @@ def theil_sen_by_group(
     cum_w = Window.partitionBy("__g__").orderBy("__b__").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    btgt = (
+    btgt = pin(
         pb.groupBy("__g__", "__b__")
         .agg(F.count(F.lit(1)).alias("__c__"))
         .withColumn("__cum__", F.sum("__c__").over(cum_w))
@@ -1524,7 +1521,6 @@ def theil_sen_by_group(
             )
         )
         .select("__g__", "__b__", "__base__", "__rn1__", "__rn2__")
-        .localCheckpoint(eager=False)
     )
     # pass 3 — sort ONLY the target buckets; ties share a slope value
     # (bucket is a function of the value), so within-bucket row_number

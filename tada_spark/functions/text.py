@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from tada_spark.plans.semantics import det_ln, round_det
+from tada_spark.plans.semantics import det_ln, pin, round_det
 
 #: language → marker stopwords for the n-gram-free heuristic language ID.
 #: Deterministic and SQL-expressible; not a real langid model (the real
@@ -628,24 +628,23 @@ def bm25_rank(
     # partition corpus token total, tf). total_toks = Σ dl is the
     # identical exact integer the old toks-count computed, so the
     # corpus text is now exploded twice (dl, tf) instead of three
-    # times. The lazy localCheckpoints on the two reduced tables are
+    # times. The lazy pins on the two reduced tables are
     # REQUIRED, not optional: df_t and the stats total are broadcast /
     # single-partition builds over tf/dl, the shape AQE stage reuse
     # does NOT unify (OPTIMIZATION_r12.md finding #2) — an A/B without
     # them re-ran the explode subtrees per consumer and measured ~4×
     # slower at sf0.1 (OPTIMIZATION_r12.md).
-    dl = toks.groupBy(id_col).agg(F.count("*").alias("dl")).localCheckpoint(eager=False)
+    dl = pin(toks.groupBy(id_col).agg(F.count("*").alias("dl")))
     # corpus stats: N = ALL docs (blank docs count toward avgdl's
     # denominator — pinned convention, mirrored in the oracle)
     stats = df.select(F.lit(1).alias("one")).groupBy().agg(F.count("*").alias("n_docs")).crossJoin(
         dl.groupBy().agg(F.sum("dl").alias("total_toks"))
     )
     qterms = list(query_terms)
-    tf = (
+    tf = pin(
         toks.filter(F.col("term").isin(qterms))
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
     avgdl = F.col("total_toks").cast("double") / F.col("n_docs").cast("double")
@@ -785,12 +784,11 @@ def kl_divergence(
     # (grp, term) exchange; each consumer re-executes the reduce-side
     # final aggregate (vocabulary-sized) and replicates the subtree
     # through planning (the det_ln expression trees are large). The
-    # lazy localCheckpoint pins the aggregate once per invocation —
+    # lazy pin holds the aggregate once per invocation —
     # measured −11% at sf0.1 (OPTIMIZATION_r12.md).
-    tf_g = (
+    tf_g = pin(
         toks.groupBy("grp", "term")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
     )
     tot_g = tf_g.groupBy("grp").agg(F.sum("n").alias("t_g"))
     tf_c = tf_g.groupBy("term").agg(F.sum("n").alias("n_c"))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tada_spark.plans.semantics import pin
+
 
 def grid_radius_join(
     points: DataFrame,
@@ -114,27 +116,24 @@ def dbscan_classify(
     # exchanges' map sides; each consumer re-executed the join
     # evaluation (probe + exact dist2 filter — the expensive part of a
     # radius join) and the aggregates above it. Two lazy
-    # localCheckpoints: the pair list (the join output that gets
+    # pins: the pair list (the join output that gets
     # aggregated anyway) and the point-cardinality count table; both
     # recomputed per invocation. Measured −5% at sf0.1 (the radius
     # join is cheap on one file locally; at scale each staged table
     # replaces a full re-execution of the grid join per consumer —
     # OPTIMIZATION_r12.md).
-    pairs = grid_radius_join(
-        points, id_col=id_col, x_col=x_col, y_col=y_col, radius=eps
-    ).localCheckpoint(eager=False)
+    pairs = pin(grid_radius_join(points, id_col=id_col, x_col=x_col, y_col=y_col, radius=eps))
     sym = pairs.select(F.col("id_a").alias("pid"), F.col("id_b").alias("nbr")).unionByName(
         pairs.select(F.col("id_b").alias("pid"), F.col("id_a").alias("nbr"))
     )
     ids = points.filter(
         F.col(id_col).isNotNull() & F.col(x_col).isNotNull() & F.col(y_col).isNotNull()
     ).select(F.col(id_col).alias("pid"))
-    counts = (
+    counts = pin(
         sym.groupBy("pid")
         .agg(F.count(F.lit(1)).alias("__nb__"))
         .join(ids, "pid", "right")
         .select("pid", (F.coalesce(F.col("__nb__"), F.lit(0)) + F.lit(1)).alias("n_in_eps"))
-        .localCheckpoint(eager=False)
     )
     core = counts.filter(F.col("n_in_eps") >= min_pts).select("pid")
     near_core = (

@@ -21,6 +21,8 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -237,30 +239,73 @@ def normalize_nulls(
     return df.select(*out)
 
 
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once and cut its lineage: the library's one
+    checkpoint. RELIABLE when the session has a checkpoint dir
+    (``sc.setCheckpointDir``), so it survives executor loss; otherwise
+    local, and losing an executor that holds its blocks fails the next
+    job that reads them (loudly — a pin never recomputes). Deployments
+    with executor churn set a checkpoint dir. A lazy pin materializes
+    in the first job that reads it; ``eager`` runs that job now."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
+def unpin(df: DataFrame) -> None:
+    """Free the storage blocks of a frame ``pin`` returned (any other
+    frame is left alone) — ``DataFrame.unpersist`` does not: they belong
+    to the RDD under its ``LogicalRDD``. Only once every reader has run:
+    a job reading a freed local pin fails. Reliable files stay."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
+def iterate(
+    state: DataFrame, step: Callable, *, rounds: int, until: Callable | None = None
+) -> tuple[DataFrame, bool]:
+    """Run ``state = pin(step(state, i))`` for up to ``rounds`` rounds;
+    return the last frame and whether ``until`` stopped the loop.
+    ``until(state)`` is the round's one action: it materializes the
+    lazy pin, and a true result stops. Without it each pin is eager.
+    The previous round's pin is unpinned once the new one is
+    materialized; the returned one stays for its readers. On any
+    exception every pin made here is unpinned; the ``state`` passed in
+    never is. Rounds are pins, not caches: a cached round nests every
+    earlier round's lineage until planning blows up."""
+    live: list[DataFrame] = []
+    try:
+        for i in range(rounds):
+            state = pin(step(state, i), eager=until is None)
+            live.append(state)
+            stopped = until is not None and until(state)
+            if len(live) == 2:
+                unpin(live.pop(0))
+            if stopped:
+                return state, True
+    except BaseException:
+        for df in live:
+            unpin(df)
+        raise
+    return state, False
+
+
 def with_rowid(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     """Attach a deterministic contiguous ``__rowid__``.
 
     With ``order_by``: the zipWithIndex pattern — range-repartition on
     the keys, per-partition local index (monotonically_increasing_id
     ascends in physical row order), then broadcast per-partition
-    offsets. The ranged/sorted frame is pinned ONCE with a lazy
-    localCheckpoint before fanning out to the offsets branch and the
-    join-back: RangePartitioner picks its boundaries from a SAMPLE
-    whose seed differs between plan executions, so letting each branch
-    re-execute the exchange pairs one partitioning's local indices
-    with another's offsets — rank inversions at every boundary (found
-    by the 15M-row replica gate in round 9; invisible below one
-    partition per range). The checkpoint materializes the frame to
-    executor storage — the honest cost of a consistent positional
-    snapshot, and it replaces the second shuffle the old design paid.
-    When the session has a checkpoint dir configured
-    (``sc.setCheckpointDir``), the pin upgrades to a RELIABLE
-    checkpoint, which survives executor loss; the local variant fails
-    the job loudly (never silently wrong) if an executor holding its
-    blocks dies between the branch reads — set a checkpoint dir under
-    dynamic allocation. The pin carries the frame's full width, so
-    project before attaching rowids if only a few columns are needed
-    downstream.
+    offsets. The ranged/sorted frame is pinned ONCE (lazy ``pin``)
+    before fanning out to the offsets branch and the join-back:
+    RangePartitioner picks its boundaries from a SAMPLE whose seed
+    differs between plan executions, so letting each branch re-execute
+    the exchange pairs one partitioning's local indices with another's
+    offsets — rank inversions at every boundary, invisible below one
+    partition per range. ``pin`` says when the pin is reliable. It
+    carries the frame's full width, so project before attaching rowids
+    if only a few columns are needed downstream.
     Deterministic when the keys are unique (the engine's positional
     discipline). Low-cardinality keys concentrate into few range
     partitions — inherent to ordering by such keys.
@@ -285,17 +330,7 @@ def with_rowid(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
             .withColumn("__pid__", F.spark_partition_id())
             .withColumn("__mid__", F.monotonically_increasing_id())
         )
-        # localCheckpoint blocks are NOT recoverable: losing an executor
-        # that holds them between the two branch reads fails the job
-        # (loudly — never silently wrong). Deployments with executor
-        # churn (dynamic allocation) set a checkpoint dir and get the
-        # reliable variant instead; the pin itself is non-negotiable
-        # because re-executing the range exchange re-samples its
-        # boundaries (the round-9 replica-gate bug).
-        if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-            d = ranged.checkpoint(eager=False)
-        else:
-            d = ranged.localCheckpoint(eager=False)
+        d = pin(ranged)
         w_off = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)
         offsets = (
             d.groupBy("__pid__")

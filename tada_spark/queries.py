@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from tada_spark.frame import Frame
 from tada_spark.functions import dedup, similarity, text
+from tada_spark.plans.semantics import pin
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -5688,12 +5689,12 @@ def assoc_rules_events(spark, sf):
     # (basket count, item totals, both pair-join sides). AQE reuses
     # only the map side of the shared distinct exchange; each consumer
     # re-ran the reduce-side distinct finalization and its own
-    # downstream shuffle over it. One lazy localCheckpoint computes
-    # the basket table once per invocation — measured −11% at sf0.1
+    # downstream shuffle over it. One lazy pin computes the basket
+    # table once per invocation — measured −11% at sf0.1
     # (OPTIMIZATION_r12.md).
-    baskets = ev.select(
+    baskets = pin(ev.select(
         "user_id", F.to_date("ts").alias("day"), F.col("event_type").alias("item")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct())
     n_baskets = baskets.select("user_id", "day").distinct().groupBy().agg(
         F.count("*").alias("n_baskets")
     )
@@ -5828,11 +5829,11 @@ def incremental_agg_update(spark, sf):
 
     base_agg = partial(orders.filter(bucket < 80))
     delta_agg = partial(orders.filter(bucket >= 80))
-    # localCheckpoint: both k-row views feed two anti-join counts AND
+    # pinned: both k-row views feed two anti-join counts AND
     # the returned plan — without the cut each action re-scans orders
     # (the near_dup_triangles discipline; these are status-cardinality
     # tables, so the materialization is bytes)
-    combined = (
+    combined = pin(
         base_agg.unionByName(delta_agg)
         .groupBy("o_orderstatus")
         .agg(
@@ -5840,10 +5841,10 @@ def incremental_agg_update(spark, sf):
             F.sum("total_cents").alias("total_cents"),
             F.min("min_key").alias("min_key"),
             F.max("max_key").alias("max_key"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
-    full = partial(orders).localCheckpoint()
+    full = pin(partial(orders), eager=True)
     # lossless-combine proof: exact integer columns, so plain anti-joins
     # in both directions must both be empty
     diff = combined.join(
@@ -5875,13 +5876,13 @@ def near_dup_triangles(spark, sf):
     (e1.b = e2.a; close with an (a, c) edge lookup). Work ∝ Σ deg² of
     the PAIR graph — already block-bounded — never corpus-sized."""
     docs = load(spark, sf, "documents").filter(F.col("doc_id") % 5 == 0)
-    # localCheckpoint: the edge list feeds THREE join branches — without
+    # pinned: the edge list feeds THREE join branches — without
     # the lineage cut each branch re-runs the expensive blocked Jaccard
     # pair join (the connected_components discipline)
-    edges = (
+    edges = pin(
         dedup.jaccard_pairs(docs.to_df(), block_cols=["lang"], ngram=4, threshold=0.35)
-        .select("id_a", "id_b")
-        .localCheckpoint()
+        .select("id_a", "id_b"),
+        eager=True,
     )
     e1 = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = edges.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
@@ -11292,7 +11293,7 @@ def ccnet_pipeline_docs(spark, sf):
     the boilerplate pass's aggregates, the LM's pair/distinct/doc
     aggregates (DP over DISTINCT words only), gopher as a pure
     projection; no new shuffle class is introduced by composing. The
-    audited plan shows 3 exchanges because the two localCheckpoints
+    audited plan shows 3 exchanges because the two pins
     truncate the url-dedup and boilerplate subtrees out of the audited
     lineage — remove a checkpoint and the plan re-inflates past the
     default budget (plan-measured 42 exchanges without them), which
@@ -11315,26 +11316,26 @@ def ccnet_pipeline_docs(spark, sf):
     # AND the final join) — checkpoint it too (r12 review: rb's
     # checkpoint alone left the corpus scan + canon window running
     # twice, once into the checkpoint and once live for the join)
-    surv = (
+    surv = pin(
         canon.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
-        .drop("__rn__")
-        .localCheckpoint()
+        .drop("__rn__"),
+        eager=True,
     )
     cleaned = surv.select(
         "doc_id", "canon_url", "domain",
         text.strip_markup(_synth_html_col()).alias("clean"),
     )
-    # localCheckpoint (the daily_ingest/pagerank pattern): rb feeds FOUR
+    # pinned (the daily_ingest/pagerank pattern): rb feeds FOUR
     # consumers (LM pair stream, its distinct-word side, the gopher
     # projection, the final join) — uncheckpointed, lineage re-derives
     # the 6-exchange boilerplate subtree per consumer (plan-measured:
     # 42 exchanges vs 7 after the cut). A production ingest pipeline
     # materializes exactly this stage boundary.
-    rb = dedup.domain_boilerplate_removal(
+    rb = pin(dedup.domain_boilerplate_removal(
         cleaned, text_col="clean", domain_col="domain", id_col="doc_id",
         min_domain_docs=3,
-    ).localCheckpoint()
+    ), eager=True)
     toksd = rb.select(
         "doc_id",
         F.explode(

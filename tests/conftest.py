@@ -37,3 +37,8 @@ def cc_path(spark: SparkSession, path: str):
         yield
     finally:
         spark.conf.set(key, saved)
+
+
+def held_rdds(spark: SparkSession) -> set[int]:
+    """Ids of the RDDs that hold storage blocks (cache or checkpoint)."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

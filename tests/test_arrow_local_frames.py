@@ -173,7 +173,9 @@ CREATE_DATAFRAME_ALLOWED = {
 }
 
 
-def _create_dataframe_sites() -> set[str]:
+def _call_sites(method: str) -> set[str]:
+    """'file:scope' of every call of a method named ``method`` in the
+    package."""
     root = Path(__file__).resolve().parent.parent / "tada_spark"
     sites = set()
 
@@ -185,7 +187,7 @@ def _create_dataframe_sites() -> set[str]:
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "createDataFrame"
+                and child.func.attr == method
             ):
                 sites.add(f"{rel}:{'.'.join(scope)}")
             visit(child, scope, rel)
@@ -199,7 +201,14 @@ def test_create_dataframe_only_through_arrow_helper():
     """A list of rows passed to createDataFrame runs every action on
     the frame through Python workers; driver-built frames with a known
     schema go through session.local_frame instead."""
-    sites = _create_dataframe_sites()
+    sites = _call_sites("createDataFrame")
     assert sites - set(CREATE_DATAFRAME_ALLOWED) == set()
     # no stale entries: every allowed site still calls createDataFrame
     assert set(CREATE_DATAFRAME_ALLOWED) - sites == set()
+
+
+@pytest.mark.parametrize("method", ["localCheckpoint", "checkpoint"])
+def test_checkpoint_only_through_pin(method):
+    """plans.semantics.pin is the one checkpoint: it picks reliable or
+    local storage, and unpin/iterate free what it made."""
+    assert _call_sites(method) == {"plans/semantics.py:pin"}

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from tada_spark.plans.semantics import canon_str, py_canon
 
-from conftest import CC_PATHS, cc_path
+from conftest import CC_PATHS, cc_path, held_rdds
 
 # ---------------------------------------------------------------------------
 # canon: TIMESTAMP_NTZ joins the LTZ branch (RFC3339 rendering)
@@ -245,12 +245,17 @@ def test_connected_components_chain_and_pair(spark):
 
 
 def test_connected_components_no_convergence_raises(spark):
+    """A 3-edge chain does not converge in 0 or 1 rounds; the raise
+    leaves nothing held."""
     from tada_spark.functions.dedup import connected_components
 
-    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"])
     for path in CC_PATHS:
-        with cc_path(spark, path), pytest.raises(RuntimeError, match="no convergence"):
-            connected_components(pairs, max_iter=0)
+        for max_iter in (0, 1):
+            before = held_rdds(spark)
+            with cc_path(spark, path), pytest.raises(RuntimeError, match="no convergence"):
+                connected_components(pairs, max_iter=max_iter)
+            assert held_rdds(spark) - before == set(), (path, max_iter)
 
 
 @pytest.mark.parametrize("path", CC_PATHS)

@@ -303,24 +303,53 @@ def test_with_rowid_branch_divergence_regression(spark, tmp_path):
 
 
 def test_with_rowid_reliable_checkpoint_when_dir_configured(spark, tmp_path):
-    """Deployments with executor churn set a checkpoint dir; with_rowid
-    must then pin the ranged frame with a RELIABLE checkpoint (which
-    survives executor loss) instead of localCheckpoint (whose blocks
-    are unrecoverable), and produce identical rowids either way."""
+    """Deployments with executor churn set a checkpoint dir; every pin
+    (with_rowid's ranged frame, the connected-components and k-center
+    rounds) is then a RELIABLE checkpoint, which survives executor loss,
+    instead of a localCheckpoint (whose blocks are unrecoverable), with
+    identical results either way."""
     from pyspark.sql import functions as F
 
+    from conftest import cc_path
+    from tada_spark.functions.dedup import connected_components
+    from tada_spark.functions.similarity import kcenter_select
     from tada_spark.plans.semantics import with_rowid
 
     src = spark.range(10_000).select(
         (F.col("id") % 97).alias("d"),
         (F.col("id") * 2654435761 % 999999937).alias("u"),
     )
-    local = {(r.d, r.u): r["__rowid__"] for r in with_rowid(src, ["d", "u"]).collect()}
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
+    corpus = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array((F.col("id") * 7 % 13).cast("float"), (F.col("id") % 5).cast("float")).alias("embedding"),
+    )
+
+    def components():
+        with cc_path(spark, "distributed"):
+            return sorted(tuple(r) for r in connected_components(pairs).collect())
+
+    runs = (
+        lambda: {(r.d, r.u): r["__rowid__"] for r in with_rowid(src, ["d", "u"]).collect()},
+        components,
+        lambda: [tuple(r) for r in kcenter_select(corpus, k=4).collect()],
+    )
+    ckpt = tmp_path / "ckpt"
+
+    def results(written):
+        out = []
+        for run in runs:
+            out.append(run())
+            written.append(len(list(ckpt.rglob("rdd-*"))))
+        return out
+
+    local_written, reliable_written = [], []
+    local = results(local_written)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    sc.setCheckpointDir(str(ckpt))
     try:
-        reliable = {(r.d, r.u): r["__rowid__"] for r in with_rowid(src, ["d", "u"]).collect()}
+        reliable = results(reliable_written)
     finally:
         # no public unset API; restore None via the Scala var's
         # bytecode-public setter so later tests see the default
@@ -329,6 +358,9 @@ def test_with_rowid_reliable_checkpoint_when_dir_configured(spark, tmp_path):
         )
     assert sc.getCheckpointDir() is None
     assert reliable == local
+    # each of the three wrote checkpoint files under the dir
+    assert local_written == [0, 0, 0]
+    assert 0 < reliable_written[0] < reliable_written[1] < reliable_written[2]
 
 
 def test_encode_progressive_rejects_bad_band_split():
