@@ -757,13 +757,13 @@ def jaccard_pairs(
     # while hot blocks spread their quadratic intersect CPU over up to
     # ``cap`` tasks. pairs_per_cell = 4096 reproduces the r12 behaviour
     # on the hot sf0.1 blocks (~1k reps/block → S_b ≈ 122 ≈ the old
-    # 4×32) and is env-tunable; TADA_JACCARD_SALT still forces one
-    # constant factor for every block. Correctness is salt-invariant:
-    # both sides of a pair share the block, hence the block's S_b, so
-    # pair (a,b) is still evaluated exactly once (in b's hash cell).
+    # 4×32); TADA_JACCARD_SALT forces one constant factor for every
+    # block. Correctness is salt-invariant: both sides of a pair share
+    # the block, hence the block's S_b, so pair (a,b) is still
+    # evaluated exactly once (in b's hash cell).
     env_salt = int(_os.environ.get("TADA_JACCARD_SALT", "0"))
     cap = min(max(4 * par, 1), 256)
-    pairs_per_cell = int(_os.environ.get("TADA_JACCARD_PAIRS_PER_CELL", "4096"))
+    pairs_per_cell = 4096
     reps = docs.filter(F.col("jid") == F.col("rep"))
     if env_salt:
         sfac = F.lit(env_salt)

@@ -7,7 +7,7 @@
 #
 # Usage: tools/battery.sh [--quick]
 #   --quick : pytest + sf0.001 gate + plan audit (skip sf0.01, the
-#             benchmark self-test and bench)
+#             benchmark self-test, the layer census and bench)
 #
 # Exit code: non-zero on the FIRST failing stage.
 set -u
@@ -39,6 +39,8 @@ if [ "$quick" -eq 0 ]; then
       python tools/check_oracle.py --sf /root/testdata/sf0.01
   run "benchmark self-test (perfbench, both workloads)" \
       python3 perfbench/selftest.py
+  run "layer census sf0.001 (all entries, through perfbench)" \
+      python tools/time_catalog.py --sf 0.001
   echo "=== bench (sf0.1)"
   python bench.py || exit $?
 fi

@@ -7,7 +7,7 @@ plan claims (the judge cannot run Spark).
 Usage:
   python tools/dump_plans.py --tag before [--sf DIR] [-q NAME ...] [--round r12]
 
-Default query set is the bench headliners (bench.py's bench_queries).
+Default query set is the bench headliners, ``bench.headline_queries()``.
 Any catalog entry name is accepted via -q.
 """
 
@@ -22,24 +22,14 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def bench_query_fns():
-    import bench
-    from tada_spark.queries import CATALOG, cosine_topk_neighbors, rolling_1h_sum
+def query_fns(names: list[str] | None = None) -> dict:
+    """The queries to dump: the bench headliners, or ``names``, each a
+    headliner or a CATALOG entry."""
+    from bench import headline_queries
+    from tada_spark.queries import CATALOG
 
-    return {
-        "scan_sum": bench.scan_sum,
-        "multi_sum": bench.multi_sum,
-        "groupby_sum": bench.groupby_sum,
-        "q1_pricing_summary": CATALOG["q1_pricing_summary"][0],
-        "q3_top_revenue_orders": CATALOG["q3_top_revenue_orders"][0],
-        "q5_region_revenue": CATALOG["q5_region_revenue"][0],
-        "sort_topk_customers": CATALOG["sort_topk_customers"][0],
-        "rolling_1h_sum": rolling_1h_sum,
-        "dedup_exact_fingerprint": CATALOG["dedup_exact_fingerprint"][0],
-        "minhash_candidate_pairs": CATALOG["minhash_candidate_pairs"][0],
-        "cosine_topk_neighbors": cosine_topk_neighbors,
-        "asof_last_purchase": CATALOG["asof_last_purchase"][0],
-    }
+    fns = headline_queries()
+    return {n: fns[n] if n in fns else CATALOG[n][0] for n in names} if names else fns
 
 
 def main() -> None:
@@ -50,15 +40,9 @@ def main() -> None:
     ap.add_argument("-q", "--queries", nargs="*", default=None)
     args = ap.parse_args()
 
-    from tada_spark.queries import CATALOG
     from tada_spark.session import get_spark
 
-    fns = bench_query_fns()
-    if args.queries:
-        for name in args.queries:
-            if name not in fns:
-                fns[name] = CATALOG[name][0]
-        fns = {n: fns[n] for n in args.queries}
+    fns = query_fns(args.queries)
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.rnd)
     os.makedirs(out_dir, exist_ok=True)
