@@ -30,10 +30,14 @@ from pyspark.sql.window import Window
 from tada_spark.plans.semantics import (
     ROWID,
     canon_key,
+    canon_sql,
     canon_str,
     normalize_nulls,
     null_safe_div,
+    py_canon,
     sort_exprs,
+    sql_name,
+    sql_str,
     with_rowid,
 )
 
@@ -496,53 +500,26 @@ class Frame:
 
     def filter_by_value(self, **values: object) -> "Frame":
         """Stringified-equality filter (reference internal.go:2775-2789):
-        compares canon_str(col) == py_canon(value) so 1.0 matches "1".
-        The literal is canonicalized driver-side (py_canon) — routing it
-        through canon_str(F.lit(v)) with no dtype would render floats as
-        "1.0" and timestamps in the wrong format, matching nothing."""
-        import datetime as _dt
+        compares the column's canon string with the value's, so 1.0
+        matches "1". A finite float renders JVM-side (``canon_sql`` over a
+        double literal: Java's digits, which py_canon's can miss in the
+        rare cases Java 17 emits non-shortest ones, e.g. 2^-24); every
+        other value renders driver-side with py_canon, its lockstep twin."""
         import math as _math
 
         fields = {f.name: f.dataType for f in self.df.schema.fields}
-        _PYTYPES = [
-            (bool, T.BooleanType()),
-            (int, T.LongType()),
-            (float, T.DoubleType()),
-            (_dt.datetime, T.TimestampType()),
-            (_dt.date, T.DateType()),
-            (str, T.StringType()),
-        ]
         preds = []
         for name, val in values.items():
             if hasattr(val, "item") and not isinstance(val, (bool, int, float, str)):
-                # numpy scalars: unwrap BEFORE type dispatch so they take
-                # the JVM-side canon_str(F.lit) route — the driver-side
-                # py_canon float render can differ from Java's in the
-                # rare cases Java 17 emits non-shortest digits (2^-24)
-                val = val.item()
+                val = val.item()  # numpy scalars
             if val is None or (isinstance(val, float) and _math.isnan(val)):
                 preds.append(F.lit(False))  # nulls never match (§1.4)
                 continue
-            # canonicalize the literal through canon_str with its OWN
-            # Spark type: both sides then use the JVM's exact string
-            # rendering (scientific notation, timestamps) by construction
-            ldt = next((t for py, t in _PYTYPES if isinstance(val, py)), None)
-            if ldt is None:
-                # Decimal / numpy scalars: canonicalize driver-side with
-                # the same integral-float rule canon_str applies (a raw
-                # str() would render Decimal('1.0') as '1.0' and match
-                # nothing against a column canon of '1')
-                from tada_spark.plans.semantics import py_canon
-
-                canon_lit = py_canon(val)
-                if canon_lit is None:
-                    preds.append(F.lit(False))
-                else:
-                    preds.append(canon_str(F.col(name), fields.get(name)) == F.lit(canon_lit))
+            if isinstance(val, float) and _math.isfinite(val):
+                lit = canon_sql(f"{val!r}D", T.DoubleType())
             else:
-                preds.append(
-                    canon_str(F.col(name), fields.get(name)) == canon_str(F.lit(val), ldt)
-                )
+                lit = sql_str(py_canon(val))
+            preds.append(F.expr(f"{canon_sql(sql_name(name), fields.get(name))} = {lit}"))
         return self.filter(*preds)
 
     def where(self, cond: Column, if_true: ColumnLike, if_false: ColumnLike, as_col: str = "where") -> "Frame":
@@ -1068,7 +1045,7 @@ class Frame:
         if canon_keys:
             for rk in canon_keys:
                 tc = f"__canon_{rk}__"
-                right = right.withColumn(tc, canon_str(F.col(rk), rfields_all[rk]))
+                right = right.withColumn(tc, canon_str(rk, rfields_all[rk]))
                 dedupe_cols[dedupe_cols.index(rk)] = tc
                 tmp_canon.append(tc)
         if unique_keys:
@@ -1090,59 +1067,50 @@ class Frame:
         if ROWID in right.columns:
             right = right.drop(ROWID)
 
-        # cross-type keys compare via canon_str (reference §1.6) — same
-        # condition builder as semi/anti so the rule can't diverge
-        cond = self._key_conds_df(right, left_on, right_on)
-
         if broadcast:
             right = F.broadcast(right)
         # inner is a true inner join on the deduped right — emulating it
         # as left + na.drop silently kept unmatched rows whenever the
         # right side added no new column names
-        joined = self.df.join(right, on=cond, how=how)
+        joined = self._key_join(right, left_on, right_on, how)
         # drop duplicated right key columns
         for lk, rk in zip(left_on, right_on):
             if rk in self.df.columns or rk == lk:
-                joined = joined.drop(right[rk])
+                joined = joined.drop(F.col(sql_name("__r", rk)))
         # only a LEFT join preserves exactly the left row set; anything
         # else (inner/outer/full) changes it ⇒ stale positions
         keeps_rows = how in ("left", "left_outer", "leftouter")
         return self._wrap(joined) if keeps_rows else self._wrap_reordered(joined)
 
-    def _key_conds_df(self, right: DataFrame, left_on: Sequence[str], right_on: Sequence[str]) -> Column:
-        """Join condition per key pair against an arbitrary right
-        DataFrame; mismatched key types compare via canon_str, with a
-        null guard (canon_str renders NULL as a sentinel equal on both
-        sides, but join equality must keep nulls-never-match). The ONE
-        copy of this rule — lookup and semi/anti both route here."""
+    def _key_join(self, right: DataFrame, left_on: Sequence[str], right_on: Sequence[str], how: str) -> DataFrame:
+        """Join ``self.df`` (aliased ``__l``) with ``right`` (aliased
+        ``__r``) on key pairs; mismatched key types compare canon strings
+        (reference §1.6), with a null guard (the canon NULL sentinel is
+        equal on both sides, but join equality must keep nulls-never-match).
+        The ONE copy of this rule — lookup and semi/anti both route here."""
         lfields = {f.name: f.dataType for f in self.df.schema.fields}
         rfields = {f.name: f.dataType for f in right.schema.fields}
         conds = []
         for lk, rk in zip(left_on, right_on):
+            l, r = sql_name("__l", lk), sql_name("__r", rk)
             if type(lfields[lk]) is type(rfields[rk]):
-                conds.append(self.df[lk] == right[rk])
+                conds.append(f"({l} = {r})")
             else:
                 conds.append(
-                    self.df[lk].isNotNull()
-                    & right[rk].isNotNull()
-                    & (canon_str(self.df[lk], lfields[lk]) == canon_str(right[rk], rfields[rk]))
+                    f"({l} IS NOT NULL AND {r} IS NOT NULL"
+                    f" AND {canon_sql(l, lfields[lk])} = {canon_sql(r, rfields[rk])})"
                 )
-        return _reduce(lambda a, b: a & b, conds)
-
-    def _key_conds(self, other: "Frame", left_on: Sequence[str], right_on: Sequence[str]) -> Column:
-        return self._key_conds_df(other.df, left_on, right_on)
+        return self.df.alias("__l").join(right.alias("__r"), F.expr(" AND ".join(conds)), how)
 
     def semi_join(self, other: "Frame", *, left_on: Sequence[str], right_on: Sequence[str]) -> "Frame":
         """Keep left rows with ≥1 match in other (free extension beyond
         the reference's lookup-only joins, §2.6). No row multiplication,
         no right columns — Spark's LeftSemi, broadcast-eligible."""
-        cond = self._key_conds(other, _strs(left_on), _strs(right_on))
-        return self._wrap_reordered(self.df.join(other.df, cond, "left_semi"))
+        return self._wrap_reordered(self._key_join(other.df, _strs(left_on), _strs(right_on), "left_semi"))
 
     def anti_join(self, other: "Frame", *, left_on: Sequence[str], right_on: Sequence[str]) -> "Frame":
         """Keep left rows with NO match in other (LeftAnti)."""
-        cond = self._key_conds(other, _strs(left_on), _strs(right_on))
-        return self._wrap_reordered(self.df.join(other.df, cond, "left_anti"))
+        return self._wrap_reordered(self._key_join(other.df, _strs(left_on), _strs(right_on), "left_anti"))
 
     def asof_join(
         self,
@@ -1353,7 +1321,7 @@ class Frame:
     def value_counts(self, name: str) -> "Frame":
         """value→count map over stringified non-null values (reference
         internal.go:2481-2496)."""
-        c = canon_str(F.col(name), self.dtype(name))
+        c = canon_str(name, self.dtype(name))
         # counting a column literally named "count" must not produce two
         # "count" columns (ambiguous downstream)
         cnt = "count" if name != "count" else "count_1"

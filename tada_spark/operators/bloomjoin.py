@@ -30,16 +30,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _positions(key: Column, m_bits: int, k_hashes: int, dtype=None) -> list[Column]:
-    """Hash positions over the CANONICAL key string (canon_str when the
-    dtype is known): a raw per-dtype cast would hash int 1 as '1' but
-    double 1.0 as '1.0' — different positions, so a cross-type equi-join
-    (which Spark coerces to a match) got FALSE NEGATIVES, breaking the
-    no-false-negative contract."""
+def _positions(key: str, m_bits: int, k_hashes: int, dtype=None) -> list[Column]:
+    """Hash positions over the CANONICAL string of column ``key``
+    (canon_str when the dtype is known): a raw per-dtype cast would hash
+    int 1 as '1' but double 1.0 as '1.0' — different positions, so a
+    cross-type equi-join (which Spark coerces to a match) got FALSE
+    NEGATIVES, breaking the no-false-negative contract."""
     from tada_spark.functions.text import md5_hash32
     from tada_spark.plans.semantics import canon_str
 
-    k = canon_str(key, dtype) if dtype is not None else key.cast("string")
+    k = canon_str(key, dtype) if dtype is not None else F.col(key).cast("string")
     return [
         F.pmod(md5_hash32(F.concat(F.lit(f"bloom{i}#"), k)), F.lit(m_bits)).cast("long")
         for i in range(k_hashes)
@@ -66,7 +66,7 @@ def bloom_bitmap(
             F.explode(
                 F.array(
                     *_positions(
-                        F.col(key_col), m_bits, k_hashes,
+                        key_col, m_bits, k_hashes,
                         dtype=keys.schema[key_col].dataType,
                     )
                 )
@@ -89,9 +89,9 @@ def bloom_bitmap(
 
 
 def bloom_might_contain(
-    bloom_map: Column, key: Column, *, m_bits: int = 1 << 16, k_hashes: int = 4, dtype=None
+    bloom_map: Column, key: str, *, m_bits: int = 1 << 16, k_hashes: int = 4, dtype=None
 ) -> Column:
-    """True iff every one of the key's k bits is set — the standard
+    """True iff every one of column ``key``'s k bits is set — the standard
     no-false-negative Bloom test, as codegen-able Column algebra. Pass
     ``dtype`` so the probe hashes the same canonical string the bitmap
     side used (cross-type join keys)."""
@@ -121,7 +121,7 @@ def bloom_prefilter(
         .crossJoin(F.broadcast(bitmap))
         .filter(
             bloom_might_contain(
-                F.col("__bloom__"), F.col(key_col), m_bits=m_bits, k_hashes=k_hashes,
+                F.col("__bloom__"), key_col, m_bits=m_bits, k_hashes=k_hashes,
                 dtype=fact.schema[key_col].dataType,
             )
         )

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tada_spark.frame import Frame, _strs
-from tada_spark.plans.semantics import canon_key, canon_str
+from tada_spark.plans.semantics import canon_key, canon_sql, canon_str, sql_name
 
 _SIMPLE = {
     "sum": F.sum,
@@ -137,7 +137,7 @@ class GroupedFrame:
         fields = {f.name: f.dataType for f in self.frame.df.schema.fields}
         exprs = {
             f"nunique_{c}": F.count_distinct(
-                F.when(F.col(c).isNotNull(), canon_str(F.col(c), fields[c]))
+                F.when(F.col(c).isNotNull(), canon_str(c, fields[c]))
             )
             for c in (cols or tuple(c for c in self.frame.value_columns if c not in self.keys))
         }
@@ -163,26 +163,25 @@ class GroupedFrame:
         grouped = self.frame.df.groupBy(*self._key_cols()).agg(
             *[e.alias(n) for n, e in exprs.items()]
         )
-        cond = None
         fields = {f.name: f.dataType for f in self.frame.df.schema.fields}
+        conds = []
         for k in self.keys:
             # with canon=True the grouped keys are canonical STRINGS;
             # the join-back must compare the same transform of the
             # source column, or NULL-keyed rows (raw NULL vs the
             # non-null sentinel) and sub-second timestamps would get
-            # NULL aggregates instead of their group's value. Built
-            # from the DATAFRAME-qualified column (canon_key's bare
-            # F.col would be ambiguous inside the self-ish join).
-            left = (
-                canon_str(self.frame.df[k], fields[k])
-                if self.canon
-                else self.frame.df[k]
-            )
-            c = left.eqNullSafe(grouped[k])
-            cond = c if cond is None else (cond & c)
-        joined = self.frame.df.join(F.broadcast(grouped), cond, "left")
+            # NULL aggregates instead of their group's value. Names are
+            # qualified by the join's aliases (a bare name would be
+            # ambiguous inside the self-ish join).
+            left = sql_name("__l", k)
+            if self.canon:
+                left = canon_sql(left, fields[k])
+            conds.append(f"({left} <=> {sql_name('__r', k)})")
+        joined = self.frame.df.alias("__l").join(
+            F.broadcast(grouped).alias("__r"), F.expr(" AND ".join(conds)), "left"
+        )
         for k in self.keys:
-            joined = joined.drop(grouped[k])
+            joined = joined.drop(F.col(sql_name("__r", k)))
         return Frame(joined, self.frame.labels, self.frame.name)
 
     def agg(self, **exprs: Column) -> Frame:

@@ -2,6 +2,7 @@
 
 from tada_spark.plans.semantics import (
     NULL_STRINGS,
+    canon_sql,
     canon_str,
     normalize_nulls,
     null_safe_div,
@@ -11,6 +12,7 @@ from tada_spark.plans.semantics import (
 
 __all__ = [
     "NULL_STRINGS",
+    "canon_sql",
     "canon_str",
     "normalize_nulls",
     "null_safe_div",

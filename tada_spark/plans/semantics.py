@@ -7,11 +7,13 @@
    thread an explicit row id. At scale a global contiguous id is a
    full-sort; we expose it opt-in only and prefer explicit order keys.
 
-2. ``canon_str`` — stringified-key equality. The reference groups, joins,
+2. ``canon_sql`` — stringified-key equality. The reference groups, joins,
    dedupes and filters on *stringified* values (fmt.Sprint semantics:
    float 1.0 prints "1"; RFC3339 timestamps — reference
-   internal.go:1347-1376, valueContainers.go:194-196). canon_str builds
-   the equivalent Column expression so cross-type keys compare equal.
+   internal.go:1347-1376, valueContainers.go:194-196). canon_sql writes
+   the equivalent expression as SQL text, so cross-type keys compare
+   equal. It is the one copy of the rules; text parses in one py4j
+   call, where Column operators cost a round trip each.
 
 3. Null normalization — NaN→NULL, the null-string set ("(null)"; blank
    opt-in — reference options.go:13-17, internal.go:1835-1926),
@@ -40,8 +42,21 @@ _NUMERIC_TYPES = (
 )
 
 
-def canon_str(col: Column, dtype: T.DataType | None = None) -> Column:
-    """Canonical string form of a value for key equality.
+def sql_name(*parts: str) -> str:
+    """SQL text of a column reference, each part backtick-quoted: dots,
+    spaces and backticks inside a name stay part of that name."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def sql_str(s: str) -> str:
+    """SQL string literal of ``s`` (the parser's default backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def canon_sql(ref: str, dtype: T.DataType | None = None) -> str:
+    """Canonical string form of a value for key equality, as SQL text
+    over the expression ``ref`` (a quoted column name or a literal) —
+    the one implementation of the canon rules.
 
     Reproduces Go ``fmt.Sprint`` semantics for the types the reference
     supports (reference internal.go:1347-1376):
@@ -56,9 +71,6 @@ def canon_str(col: Column, dtype: T.DataType | None = None) -> Column:
     internal key material, and staying on Spark's native string cast keeps
     the hot path in codegen; py_canon mirrors the Java layout exactly.
     """
-    if dtype is None:
-        c = col.cast("string")
-        return F.coalesce(c, F.lit("\x00null"))
     if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
         # try_cast, not cast: ANSI mode (Spark 4 default) THROWS on
         # |v| >= 2^63 — a plain cast would crash any canon-key plan the
@@ -68,52 +80,62 @@ def canon_str(col: Column, dtype: T.DataType | None = None) -> Column:
         # falls through to the string render (2^63 as a double equals
         # double(MAX_LONG), which would otherwise print ...807 for a
         # value that is ...808)
-        as_long = col.try_cast("long")
-        in_range = (col >= F.lit(float(-(2**63)))) & (col < F.lit(float(2**63)))
-        frac = col.cast("string")
+        as_long = f"try_cast({ref} AS BIGINT)"
+        text = f"CAST({ref} AS STRING)"
         if isinstance(dtype, T.DecimalType):
             # Decimal string casts keep scale ("1.50"); Go fmt.Sprint does
             # not — strip trailing fractional zeros so canon keys agree with
             # the double rendering of the same value.
-            frac = F.regexp_replace(frac, r"(\.\d*?)0+$", "$1")
-            frac = F.regexp_replace(frac, r"\.$", "")
-        if isinstance(dtype, T.DecimalType):
+            text = rf"regexp_replace(regexp_replace({text}, r'(\.\d*?)0+$', '$1'), r'\.$', '')"
             # exact integral test: the double-comparison shortcut loses
             # precision past ~16 significant digits (Decimal
             # '123456789012345678.9' double-rounds equal to its floor
             # and rendered truncated); the remainder stays in decimal
             # arithmetic, and try_cast long is exact for in-range values
-            integral = F.pmod(col, F.lit(1)) == F.lit(0)
+            integral = f"pmod({ref}, 1) = 0"
         else:
-            integral = col.cast("double") == as_long.cast("double")
-        # as_long.isNotNull() closes the decimal MIN_LONG gap: an integral
+            integral = f"CAST({ref} AS DOUBLE) = CAST({as_long} AS DOUBLE)"
+        # the IS NOT NULL test closes the decimal MIN_LONG gap: an integral
         # decimal in [-2^63-1024, -2^63-1] double-rounds to exactly -2^63
-        # (passing in_range) while try_cast returns NULL — without the
-        # guard the when-branch would emit NULL and coalesce the sentinel
+        # (passing the range test) while try_cast returns NULL — without
+        # it the THEN branch would emit NULL and coalesce the sentinel
         # for a real value
-        c = F.when(in_range & as_long.isNotNull() & integral, as_long.cast("string")).otherwise(
-            frac
+        c = (
+            f"CASE WHEN {ref} >= {float(-(2**63))!r} AND {ref} < {float(2**63)!r}"
+            f" AND {as_long} IS NOT NULL AND {integral}"
+            f" THEN CAST({as_long} AS STRING) ELSE {text} END"
         )
     elif isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         # NTZ wall clock renders identically to the reference's
         # RFC3339-UTC form (session zone is pinned UTC, so LTZ and NTZ
         # of the same ingested naive value canon-compare equal)
-        c = F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss'Z'")
+        c = rf"date_format({ref}, 'yyyy-MM-dd\'T\'HH:mm:ss\'Z\'')"
     elif isinstance(dtype, T.DateType):
-        c = F.date_format(col, "yyyy-MM-dd")
+        c = f"date_format({ref}, 'yyyy-MM-dd')"
     elif isinstance(dtype, T.BooleanType):
         # NULL must fall through to the coalesce sentinel, not "false"
-        c = F.when(col.isNull(), F.lit(None)).when(col, F.lit("true")).otherwise(F.lit("false"))
+        c = f"CASE WHEN {ref} IS NULL THEN NULL WHEN {ref} THEN 'true' ELSE 'false' END"
     else:
-        c = col.cast("string")
-    return F.coalesce(c, F.lit("\x00null"))
+        c = f"CAST({ref} AS STRING)"
+    return rf"coalesce({c}, '\u0000null')"
+
+
+def canon_str(col: str | Column, dtype: T.DataType | None = None) -> Column:
+    """``canon_sql`` as a Column over the column named ``col`` (or an
+    unqualified ``F.col`` reference to it)."""
+    if isinstance(col, Column):
+        node = col._jc.node()
+        if node.getClass().getSimpleName() != "UnresolvedAttribute":
+            raise TypeError("canon_str: pass a column name or an unqualified F.col reference")
+        return F.expr(canon_sql(sql_name(*node.nameParts().mkString("\x00").split("\x00")), dtype))
+    return F.expr(canon_sql(sql_name(col), dtype))
 
 
 def _java_double_str(v: float) -> str:
     """Java ``Double.toString`` layout from Python's shortest-repr digits:
     plain decimal (with at least one fractional digit) for 1e-3 <= |v| <
     1e7, else ``d.dddEn`` scientific — the rendering Spark's double->string
-    cast produces, which canon_str's non-integral branch inherits. Known
+    cast produces, which canon_sql's non-integral branch inherits. Known
     divergence: subnormals (|v| < 2.3e-308), where Java 17's legacy digit
     generator is not shortest ("4.9E-324" vs repr "5e-324") — byte-level
     only; value exactness (both renderings parse back to the same
@@ -147,17 +169,18 @@ def _java_double_str(v: float) -> str:
 
 
 def py_canon(value: object) -> str | None:
-    """Python-side twin of canon_str for driver-known literals: the
+    """Python-side twin of canon_sql for driver-known literals: the
     canonical string a value would render to in a canon-key comparison.
 
     Lockstep contract (pinned by tests/test_canon_lockstep.py): exact
-    string equality with canon_str for Decimal / datetime / date / bool /
-    int — the types it is load-bearing for (filter_by_value's non-lit
-    fallback). For floats it emits Java Double.toString LAYOUT from
+    string equality with canon_sql for Decimal / datetime / date / bool /
+    int — the types it is load-bearing for (filter_by_value renders them
+    with it). For floats it emits Java Double.toString LAYOUT from
     Python's shortest digits; Java 17's legacy digit generator is
     occasionally non-shortest (2^-24 -> 17 digits), so float strings are
-    value-equal but not always byte-equal — engine paths route float
-    literals JVM-side (canon_str(F.lit(v))) and never hit this."""
+    value-equal but not always byte-equal — engine paths route finite
+    float literals JVM-side (canon_sql over a double literal) and never
+    hit this."""
     import datetime as _dt
     import math as _math
 
@@ -169,13 +192,13 @@ def py_canon(value: object) -> str | None:
         if _math.isnan(value):
             return None
         if _math.isinf(value):
-            # canon_str: inf != its long-cast, so Spark renders the
+            # canon_sql: inf is out of the long range, so Spark renders the
             # string cast — "Infinity"/"-Infinity" (int(inf) would raise)
             return "Infinity" if value > 0 else "-Infinity"
         if value == int(value) and -(2**63) <= value < 2**63:
             return str(int(value))
         # non-integral (or too big for the long-cast integral rule):
-        # lockstep with canon_str's string cast = Java Double.toString
+        # lockstep with canon_sql's string cast = Java Double.toString
         # layout, NOT Python str() — they disagree outside [1e-3, 1e7)
         # ("5.0E-4" vs "0.0005"), which silently broke filter_by_value
         # on such literals until the r4 property suite caught it
@@ -185,7 +208,7 @@ def py_canon(value: object) -> str | None:
         # 1000 on glibc ('999'), while Spark's date_format pads ('0999').
         # Aware values normalize to UTC wall clock first — a bare
         # isoformat would keep the '+00:00' offset and never match
-        # canon_str's '...Z' rendering
+        # canon_sql's '...Z' rendering
         if value.tzinfo is not None:
             value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         return value.replace(microsecond=0).isoformat(sep="T") + "Z"
@@ -195,9 +218,9 @@ def py_canon(value: object) -> str | None:
 
     if isinstance(value, _decimal.Decimal):
         if value == int(value):
-            return str(int(value))  # integral rule, like canon_str
+            return str(int(value))  # integral rule, like canon_sql
         # non-scientific render, trailing fractional zeros stripped —
-        # lockstep with canon_str's DecimalType regexp_replace branch
+        # lockstep with canon_sql's DecimalType regexp_replace branch
         s = format(value, "f")
         if "." in s:
             s = s.rstrip("0").rstrip(".")
@@ -208,10 +231,11 @@ def py_canon(value: object) -> str | None:
 
 
 def canon_key(df: DataFrame, names: list[str], sep: str = "|") -> Column:
-    """Composite stringified key: per-row concat of canon_str values joined
-    by "|" (reference internal.go:1347-1376)."""
+    """Composite stringified key: per-row concat of canon values joined
+    by "|" (reference internal.go:1347-1376), as one expression."""
     fields = {f.name: f.dataType for f in df.schema.fields}
-    return F.concat_ws(sep, *[canon_str(F.col(n), fields.get(n)) for n in names])
+    parts = ", ".join(canon_sql(sql_name(n), fields.get(n)) for n in names)
+    return F.expr(f"concat_ws({sql_str(sep)}, {parts})")
 
 
 def normalize_nulls(

@@ -11,6 +11,14 @@ one you'd also want on a 1000-executor cluster:
   * shuffle.partitions sized to cores locally; on a real cluster AQE
     coalesces from a deliberately-high initial number, so we set the
     initial high and let AQE shrink.
+  * DataFrame debugging off (``spark.python.sql.dataFrameDebugging.
+    enabled=false``, a static conf). With it on, PySpark wraps every
+    Column method and ``F.col``: each call walks the Python stack and
+    adds py4j round trips to record the caller's file:line (measured:
+    ``F.col("a") + F.lit(1)`` 3.4 ms on, 1.0 ms off). The trade-off:
+    a runtime error's DataFrame query context no longer names the
+    Python file:line that built the failing expression; its error
+    class and message are unchanged.
 
 ``local_frame`` turns driver-held values into a DataFrame through Arrow,
 so small frames built on the driver never start Python workers.
@@ -43,6 +51,7 @@ def get_spark(app_name: str = "tada_spark", cpus: int | None = None) -> SparkSes
         .config("spark.sql.timeType.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

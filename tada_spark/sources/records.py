@@ -11,16 +11,15 @@ read_records builds its frame as an Arrow local relation
 (``session.local_frame``): the plan is a ``LocalTableScan`` and no
 Python worker runs when it executes. write_records selects columns by
 position, so any name the reader accepts (dots, backticks, duplicates)
-writes back unchanged.
+writes back unchanged, and fetches its canon strings as one Arrow table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from tada_spark.frame import Frame
-from tada_spark.plans.semantics import NULL_STRINGS, canon_str
+from tada_spark.plans.semantics import NULL_STRINGS, canon_sql
 
 #: Reference multi-level column-name separator (options.go:9).
 LEVEL_SEP = "|"
@@ -162,13 +161,16 @@ def read_interface_records(spark: SparkSession, records: list[dict], labels: lis
 
 def write_records(frame: Frame, *, include_labels: bool = True) -> list[list[str]]:
     """Frame → [][]string with nulls as "(null)" (reference
-    io.go:271-299). Driver-side sink — test/interop scale only."""
+    io.go:271-299). Driver-side sink — test/interop scale only. One
+    ``selectExpr`` of canon strings (never NULL) fetched with ``toArrow``."""
     df = frame.to_df()
     fields = df.schema.fields
     keep = [i for i, f in enumerate(fields) if include_labels or f.name not in frame.labels]
-    # positional names: F.col would split "a.b" and refuse a duplicate
-    pos = df.toDF(*[f"_{i}" for i in range(len(fields))])
-    out = pos.select(*[canon_str(F.col(f"_{i}"), fields[i].dataType) for i in keep]).collect()
     header = [[fields[i].name for i in keep]]
-    body = [[NULL_OUT if v == "\x00null" else v for v in row] for row in out]
-    return header + body
+    if not keep:
+        return header + [[] for _ in range(df.count())]
+    # positional names: a name can hold dots or backticks, or repeat
+    pos = df.toDF(*[f"_{i}" for i in range(len(fields))])
+    table = pos.selectExpr(*[f"{canon_sql(f'_{i}', fields[i].dataType)} AS _{i}" for i in keep]).toArrow()
+    cols = [[NULL_OUT if v == "\x00null" else v for v in c.to_pylist()] for c in table.columns]
+    return header + [list(row) for row in zip(*cols)]

@@ -20,6 +20,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
 
 def _event_time(df: DataFrame, ts_col: str):
     """Spark's watermark/window machinery hard-requires TIMESTAMP (LTZ)
@@ -179,11 +184,28 @@ def run_available_now(
     minBatchesToRetain measured no effect (bounded replays never hit
     maintenance or retention). That is the machinery's price, not an
     operator defect — further tuning belongs to the sink/trigger, not
-    to operator code."""
+    to operator code.
+
+    Checkpoint manager: with no ``spark.sql.streaming.checkpointLocation``
+    the checkpoint is a fresh local temp dir, and the query runs with
+    the FileSystem-based checkpoint file manager instead of the default
+    FileContext one (set for the query's lifetime, unset after it, on a
+    timeout or a raise too). Without Hadoop's native library the
+    FileContext path forks ``readlink`` on the paths of every rename
+    and their ``.crc`` twins: a warm run of a tumbling aggregate over
+    2 state partitions forked 80 ``readlink`` and 30 ``chmod`` processes
+    with it, and the same 30 ``chmod`` (from ``mkdirs``) with the
+    FileSystem manager. Both write the same checkpoint files, ``.crc``
+    checksums included."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    overrides = {}
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
+        overrides["spark.sql.shuffle.partitions"] = str(int(state_partitions))
+    if spark.conf.get("spark.sql.streaming.checkpointLocation", None) is None:
+        overrides[_CHECKPOINT_MANAGER_CONF] = _FS_CHECKPOINT_MANAGER
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -196,8 +218,11 @@ def run_available_now(
             q.stop()
             raise TimeoutError(f"streaming query {query_name!r} exceeded {timeout_s}s")
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     _capture_explain(q, query_name)
     return spark.table(query_name)
 
