@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tada_spark.plans.semantics import det_ln
+from tada_spark.plans.semantics import det_ln, pin
 
 
 def _nb_bucket(tok: Column, n_buckets: int) -> Column:
@@ -72,15 +72,12 @@ def naive_bayes_scores(
 
     # --- train: bounded count tables ---------------------------------
     # lb's OUTPUT is bounded (≤ L×B rows) but its BUILD tokenizes the
-    # whole training corpus; persisting it means label_tok and the
-    # weight grid share ONE tokenization pass instead of re-deriving
-    # it per consumer (the minhash single-scan lesson). doc_counts
-    # (≤ L rows) likewise feeds both the grid and the prior scalars.
-    # Both caches outlive this call by design (the returned plan is
-    # lazy); ownership goes to the cachereg ledger — long-lived
-    # sessions call functions.cachereg.release() between corpora
-    # (always safe: unpersisted plans recompute, never error).
-    from tada_spark.functions.cachereg import owned_persist
+    # whole training corpus; pinning it means label_tok and the weight
+    # grid share ONE tokenization pass instead of re-deriving it per
+    # consumer (the minhash single-scan lesson). doc_counts (≤ L rows)
+    # likewise feeds both the grid and the prior scalars. Both are lazy
+    # pins the returned plan reads; Spark frees them once the result is
+    # dropped.
 
     # a trainable row needs BOTH a label and at least one token: a
     # blank-text labeled doc trains nothing — including it only in the
@@ -92,11 +89,9 @@ def naive_bayes_scores(
         & F.col(text_col).isNotNull()
         & (F.length(F.trim(F.col(text_col))) > 0)
     )
-    lb = owned_persist(feature_counts(trainable, label_col))
+    lb = pin(feature_counts(trainable, label_col))
     label_tok = lb.groupBy(label_col).agg(F.sum("c").alias("n_l"))
-    doc_counts = owned_persist(
-        trainable.groupBy(label_col).agg(F.count(F.lit(1)).alias("d_l"))
-    )
+    doc_counts = pin(trainable.groupBy(label_col).agg(F.count(F.lit(1)).alias("d_l")))
     # 1-row scalar broadcast for the prior denominators (D docs, L
     # labels) — the tfidf/q11 scalar-subquery shape, never a
     # driver-side collect

@@ -432,7 +432,7 @@ def connected_components(
 
     Distributed path, for larger edge sets, in DataFrame algebra: each
     round is one shuffle over the edge list plus a label join, run by
-    ``iterate``: it holds the edge cache and at most two rounds' pins,
+    ``iterate``: it holds the edge pin and at most two rounds' pins,
     the result holds the last round's pin, and a raise holds nothing.
     The changed flag is computed IN the label pass (nmin < label), so
     the count of changed labels is the round's one action and
@@ -451,7 +451,7 @@ def connected_components(
     edges = fwd.union(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     ).distinct()
-    edges.cache()
+    edges = pin(edges)
 
     def step(labels: DataFrame, _: int) -> DataFrame:
         # min neighbor label per node, then min with own label
@@ -481,7 +481,7 @@ def connected_components(
             unpin(labels)
             raise RuntimeError(f"connected_components: no convergence in {max_iter} iters")
     finally:
-        edges.unpersist()
+        unpin(edges)
     return labels.select(
         F.col("node"),
         F.col("label").alias("component"),

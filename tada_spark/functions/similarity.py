@@ -957,7 +957,7 @@ def kcenter_select(
     k <= 0 returns zero rows (a zero-size coreset has no seed).
 
     100 TB shape: k rounds × one map-side max-struct aggregate over the
-    partitioned corpus, persisted once so the seed job and round 1
+    partitioned corpus, pinned once so the seed job and round 1
     re-read the filtered/cast frame instead of re-scanning source (the
     chosen set rides along as k literal vectors
     — never a join, never a collect of the corpus). Each round carries
@@ -966,14 +966,14 @@ def kcenter_select(
     distance work, not the O(n·k²) of rebuilding min-d² to every chosen
     center each round. k is small by construction (a coreset), so the
     k jobs are the honest cost. Each round's pin is a corpus copy;
-    ``iterate`` holds at most two beside the persisted frame, and none
+    ``iterate`` holds at most two beside the corpus pin, and none
     once the call returns. Executor loss mid-loop fails the call unless
     a checkpoint dir is set (``sc.setCheckpointDir``), which makes the
     pins reliable."""
     from tada_spark.operators.layout import widen_narrow_scan
 
     # widen a narrow scan first (r12): the k argmax jobs each fold up
-    # to k-1 dot products per row over the PERSISTED partitioning — a
+    # to k-1 dot products per row over the PINNED partitioning — a
     # single-split source would pin every round to one core
     pts = widen_narrow_scan(corpus.filter(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
@@ -981,7 +981,7 @@ def kcenter_select(
         F.col(id_col).alias("__kid__"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__kv__"),
     )
-    # a·a per row, folded ONCE into the persisted table (r12): the k
+    # a·a per row, folded ONCE into the pinned table (r12): the k
     # argmax rounds all reuse the identical left-to-right fold value,
     # so hoisting it out of the per-round expression is bit-neutral
     # (dot is deterministic) and removes one interpreted HOF fold per
@@ -1001,14 +1001,14 @@ def kcenter_select(
         # a zero-size coreset is zero rows, not the seed row (r8 ADVICE)
         return local_frame(spark, out_schema, [[], [], []])
     # the filtered/cast corpus is re-scanned by every one of the k
-    # argmax jobs — cache it once instead of recomputing from source
-    # k times (r8 ADVICE); the try/finally guarantees the unpersist
-    # even when a mid-loop job fails
-    pts = pts.persist()
+    # argmax jobs — pin it once instead of recomputing from source k
+    # times (r8 ADVICE); the result reads none of it, so the finally
+    # unpins it, also when a mid-loop job fails
+    pts = pin(pts)
     try:
         return _kcenter_greedy(spark, pts, k, out_schema)
     finally:
-        pts.unpersist()
+        unpin(pts)
 
 
 def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: T.StructType) -> DataFrame:
@@ -1078,7 +1078,7 @@ def _kcenter_greedy(spark, pts: DataFrame, k: int, out_schema: T.StructType) -> 
 
     cur, _ = iterate(pts, step, rounds=k - 1, until=argmax)
     # the result is built from driver-side literals: neither the last
-    # round's pin nor the caller's persisted pts is read by it
+    # round's pin nor the caller's pinned pts is read by it
     unpin(cur)
     return local_frame(
         spark,
@@ -1141,20 +1141,14 @@ def mmr_rerank(
             .alias("sim_e6"),
         )
     )
-    # persist the two BOUNDED pool tables (n_queries × pool and
-    # n_queries × pool² rows): without the cache every greedy step
-    # re-derives them from scratch and the k-step plan re-scans the
-    # corpus ~k² times (measured: 144 exchanges at k=4 uncached, 17
-    # cached). They must stay cached past return — the result is a
-    # LAZY plan over them — so ownership goes to the cachereg ledger:
-    # long-lived sessions call functions.cachereg.release() between
-    # batches (always safe: an unpersisted plan recomputes, never
-    # errors). Tested: a call loop with release() keeps the Spark
-    # cache registry empty (tests/test_r11_ops.py).
-    from tada_spark.functions.cachereg import owned_persist
-
-    cands = owned_persist(cands)
-    pairs = owned_persist(pairs)
+    # pin the two BOUNDED pool tables (n_queries × pool and
+    # n_queries × pool² rows): unpinned, every greedy step re-derives
+    # them from scratch and the k-step plan re-scans the corpus ~k²
+    # times (measured: 144 exchanges at k=4). The result is a LAZY plan
+    # over them, so they are lazy pins; Spark frees them once the result
+    # is dropped (tests/test_pin_lifetime.py).
+    cands = pin(cands)
+    pairs = pin(pairs)
     selected: DataFrame | None = None
     for step in range(1, k + 1):
         if selected is None:
@@ -1195,11 +1189,11 @@ def mmr_rerank(
                 F.lit(step).alias("step"),
                 "mmr_num",
             )
-            # each pick (n_queries rows) is cached too: step i's plan
-            # references every earlier pick, so uncached picks nest
+            # each pick (n_queries rows) is pinned too: step i's plan
+            # references every earlier pick, so unpinned picks nest
             # copies of all prior window chains — plan size goes
-            # exponential in k (197 exchanges at k=4; 17 with caching)
+            # exponential in k (197 exchanges at k=4)
         )
-        pick = owned_persist(pick)
+        pick = pin(pick)
         selected = pick if selected is None else selected.unionByName(pick)
     return selected

@@ -1,7 +1,11 @@
 """Storage lifetime of pins: the round loops free every round their
-result does not read, and ``iterate`` frees its own pins on a raise."""
+result does not read, ``iterate`` frees its own pins on a raise, and
+Spark frees the pins a result reads once the result is dropped."""
 
 from __future__ import annotations
+
+import gc
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,17 +38,75 @@ def _kcenter(spark):
     return kcenter_select(corpus, k=6)
 
 
+def _mmr(spark):
+    from tada_spark.functions.similarity import mmr_rerank
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float((i * 7) % 5), 1.0]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    return mmr_rerank(emb, emb.filter(F.col("vec_id") < 2), k=2, pool=4)
+
+
+def _naive_bayes(spark):
+    from tada_spark.functions.classify import naive_bayes_scores
+
+    train = spark.createDataFrame(
+        [(1, "a b c", "en"), (2, "d e f", "fr"), (3, "a c e", "en")],
+        "doc_id long, text string, lang string",
+    )
+    test = spark.createDataFrame([(9, "a b"), (10, "e f")], "doc_id long, text string")
+    return naive_bayes_scores(train, test, n_buckets=8)
+
+
+def _held_after_gc(spark, before: set[int], timeout_s: float = 30.0) -> set[int]:
+    """RDDs holding storage that were not in ``before``, once the JVM has
+    collected what Python dropped: Spark's ContextCleaner frees the
+    storage of an RDD that no live plan reads after a JVM GC."""
+    gc.collect()
+    deadline = time.monotonic() + timeout_s
+    while True:
+        spark._jvm.System.gc()
+        held = held_rdds(spark) - before
+        if not held or time.monotonic() > deadline:
+            return held
+        time.sleep(0.5)
+
+
 @pytest.mark.parametrize(
     "run,returned_pins",
-    [(_components, 1), (_pagerank, 1), (_kcenter, 0)],
-    ids=["connected_components", "pagerank_quantized", "kcenter_select"],
+    [(_components, 1), (_pagerank, 1), (_kcenter, 0), (_mmr, 4), (_naive_bayes, 2)],
+    ids=[
+        "connected_components", "pagerank_quantized", "kcenter_select", "mmr_rerank",
+        "naive_bayes_scores",
+    ],
 )
 def test_round_loops_hold_only_what_the_result_reads(spark, run, returned_pins):
     """Connected components and PageRank return a frame that reads the
-    last round's pin; k-center returns driver-side literals."""
-    before = held_rdds(spark)
-    run(spark).collect()
-    assert len(held_rdds(spark) - before) <= returned_pins
+    last round's pin; k-center returns driver-side literals; mmr's
+    result reads its pool, pair and k pick pins, naive Bayes' its two
+    count tables. No call leaves an entry in the cache manager, a
+    dropped result frees every pin it read, and nothing carries over
+    from one call to the next: the second call runs as many jobs as
+    the first."""
+    sc = spark.sparkContext
+    jobs = []
+    for call in range(2):
+        before = held_rdds(spark)
+        group = f"pin_lifetime_{run.__name__}_{call}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run(spark)
+            out.collect()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert len(held_rdds(spark) - before) <= returned_pins
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        del out
+        assert _held_after_gc(spark, before) == set()
+    assert jobs[0] == jobs[1]
 
 
 def test_iterate_unpins_its_own_pins_on_a_raise(spark):

@@ -1,9 +1,5 @@
 """Round-11 hygiene pins (r10 VERDICT asks #5/#6 + ADVICE items):
 
-* cachereg: the persisting operators (mmr_rerank, naive_bayes_scores)
-  register their bounded caches in a ledger and a call loop with
-  ``release()`` keeps the Spark cache registry empty — no session-
-  lifetime accumulation (r10 ADVICE #1/#2).
 * minhash blank-doc convention at shingle_words=1 (r10 ADVICE #3):
   blank/whitespace docs produce NO signature row, for every
   shingle_words — the r10 single-scan rewrite made this uniform.
@@ -21,50 +17,6 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
-
-
-def _cache_mgr_empty(spark) -> bool:
-    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_cachereg_loop_does_not_grow_cache_registry(spark):
-    from tada_spark.functions import cachereg
-    from tada_spark.functions.classify import naive_bayes_scores
-
-    cachereg.release()
-    train = spark.createDataFrame(
-        [(1, "a b c", "en"), (2, "d e f", "fr"), (3, "a c e", "en")],
-        "doc_id long, text string, lang string",
-    )
-    test = spark.createDataFrame([(9, "a b"), (10, "e f")], "doc_id long, text string")
-    for _ in range(100):
-        naive_bayes_scores(train, test, n_buckets=8)
-        assert cachereg.live_count() == 2  # lb + doc_counts, this call only
-        released = cachereg.release()
-        assert released == 2
-        assert cachereg.live_count() == 0
-    assert _cache_mgr_empty(spark)
-
-
-def test_cachereg_covers_mmr_rerank(spark):
-    from tada_spark.functions import cachereg
-    from tada_spark.functions.similarity import mmr_rerank
-
-    cachereg.release()
-    emb = spark.createDataFrame(
-        [(i, [float(i % 3), float((i * 7) % 5), 1.0]) for i in range(12)],
-        "vec_id long, embedding array<double>",
-    )
-    out = mmr_rerank(emb, emb.filter(F.col("vec_id") < 2), k=2, pool=4)
-    # cands + pairs + one pick frame per greedy step
-    assert cachereg.live_count() == 2 + 2
-    rows = out.collect()
-    assert len(rows) == 2 * 2
-    # release AFTER materialization: result already computed; the
-    # lazy plan stays valid (it would just recompute if re-used)
-    assert cachereg.release() == 4
-    assert _cache_mgr_empty(spark)
-    assert len(out.collect()) == 2 * 2  # recompute-after-release is safe
 
 
 def test_minhash_blank_doc_has_no_signature_at_shingle_words_1(spark):

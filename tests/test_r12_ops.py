@@ -12,8 +12,6 @@
   a 1-doc domain keeps every line instead of being emptied.
 * canonical_url tracking_params override (ADVICE #4): corpora where
   'ref' is content-bearing can keep it.
-* cachereg scope (ADVICE #1): per-call ownership — releasing one
-  operator call's caches no longer guillotines another's.
 """
 
 from __future__ import annotations
@@ -128,37 +126,6 @@ def test_canonical_url_tracking_params_override(spark):
         canonical_url(F.col("url"), tracking_params=keep_ref).alias("c")
     ).head()[0]
     assert kept == "https://host.com/repo?ref=main"  # content-bearing ref kept
-
-
-def test_cachereg_scope_releases_only_its_own(spark):
-    from tada_spark.functions import cachereg
-
-    cachereg.release()
-    outer = spark.range(10)
-    cachereg.owned_persist(outer)  # an unscoped (other operator's) cache
-    with cachereg.scope():
-        inner = cachereg.owned_persist(spark.range(20))
-        inner.count()
-        assert cachereg.live_count() == 2
-    # scope exit freed ONLY the inner frame
-    assert cachereg.live_count() == 1
-    assert outer.storageLevel.useMemory  # outer cache untouched
-    assert cachereg.release() == 1
-    assert cachereg.live_count() == 0
-
-
-def test_cachereg_nested_scopes_own_their_persists(spark):
-    from tada_spark.functions import cachereg
-
-    cachereg.release()
-    with cachereg.scope():
-        cachereg.owned_persist(spark.range(5))
-        with cachereg.scope() as s2:
-            cachereg.owned_persist(spark.range(6))
-            assert cachereg.live_count() == 2
-        assert cachereg.live_count() == 1  # inner released its one
-        assert s2.release() == 0  # idempotent
-    assert cachereg.live_count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -284,40 +251,6 @@ def test_oph_blank_docs_drop_and_densify_lands(spark):
     # doc 5 has ONE shingle -> exactly one real slot, 7 borrows
     real = [i for i in range(8) if got[5][f"h{i}"] < (1 << 32)]
     assert len(real) == 1
-
-
-# ---------------------------------------------------------------------------
-# persist-convention guard (r11 VERDICT #8): every operator persist goes
-# through cachereg (or a documented local try-finally), mechanically
-# ---------------------------------------------------------------------------
-
-
-def test_no_unledgered_persist_sites():
-    """Grep guard: a bare .persist( anywhere in operator code outside
-    cachereg.owned_persist and the allowlisted local try-finally sites
-    fails this test — so the r10 session-lifetime cache-leak class
-    cannot silently return. Extend ALLOWED only with a site that
-    unpersists in the SAME function (try-finally) or ledgers via
-    cachereg."""
-    import re
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parents[1] / "tada_spark"
-    # file -> allowed .persist( call sites (function name containing it)
-    ALLOWED = {
-        "functions/cachereg.py": 1,  # the ledger itself
-        "functions/similarity.py": 1,  # kcenter's local persist/try-finally
-    }
-    found: dict[str, int] = {}
-    for p in pkg.rglob("*.py"):
-        n = len(re.findall(r"\.persist\(", p.read_text()))
-        if n:
-            found[str(p.relative_to(pkg))] = n
-    assert found == ALLOWED, (
-        f"unledgered .persist( sites: {found} — route new persists "
-        "through cachereg.owned_persist or a local try-finally + "
-        "extend the allowlist with justification"
-    )
 
 
 def test_unigram_train_step_reestimates_probs(spark):

@@ -9,6 +9,10 @@ Usage:
 
 Default query set is the bench headliners, ``bench.headline_queries()``.
 Any catalog entry name is accepted via -q.
+
+Every dump is normalized (``normalize``): the ids and names that change
+from run to run or checkout to checkout are replaced by placeholders,
+so two dumps of the same plans diff clean.
 """
 
 from __future__ import annotations
@@ -16,10 +20,30 @@ from __future__ import annotations
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+# (pattern, placeholder): expression ids, exchange plan ids, RDD ids and
+# Spark application ids (local-<ms>, app-<date>-<n>), which the catalog
+# stamps into temp table and dir names, also with `-` mapped to `_`
+_RUN_IDS = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[n]"),
+    (re.compile(r"(?:local|app)[-_]\d{8,}(?:[-_]\d+)?"), "<app>"),
+]
+
+
+def normalize(plan: str, root: str = ROOT) -> str:
+    """``plan`` with run ids and the checkout path ``root`` replaced."""
+    plan = plan.replace(root, "<root>")
+    for pattern, placeholder in _RUN_IDS:
+        plan = pattern.sub(placeholder, plan)
+    return plan
 
 
 def query_fns(names: list[str] | None = None) -> dict:
@@ -44,7 +68,7 @@ def main() -> None:
 
     fns = query_fns(args.queries)
 
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", args.rnd)
+    out_dir = os.path.join(ROOT, "plans", args.rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("tada_spark_plandump")
@@ -61,7 +85,7 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(f"# {name} @ {args.sf} [{args.tag}]\n")
-            f.write(buf.getvalue())
+            f.write(normalize(buf.getvalue()))
         print(f"wrote {path}")
     spark.stop()
 

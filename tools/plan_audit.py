@@ -273,36 +273,6 @@ def _same_expr(fe: str, pe: str) -> bool:
     return bool(fe[:60]) and (pe.startswith(fe[:60]) or fe.startswith(pe[:60]))
 
 
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" :+-*()0123456789"))
-
-
-def live_exchanges(plan: str) -> int:
-    """Shuffle exchanges OUTSIDE InMemoryRelation build subtrees.
-
-    A cached (persisted) table prints its one-time build plan under the
-    InMemoryRelation node at EVERY scan site, so raw substring counts
-    multiply the build cost by the number of cache hits — an iterative
-    operator (MMR's k greedy steps) reads as hundreds of textual
-    exchanges while executing a handful. Build-plan exchanges run once
-    at materialization; only exchanges above cache boundaries recur.
-    """
-    n = 0
-    skip_depth: int | None = None
-    for line in plan.splitlines():
-        ind = _indent(line)
-        if skip_depth is not None:
-            if ind > skip_depth:
-                continue
-            skip_depth = None
-        if "InMemoryRelation" in line:
-            skip_depth = ind
-            continue
-        if "Exchange" in line and "BroadcastExchange" not in line and "ReusedExchange" not in line:
-            n += 1
-    return n
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
@@ -357,10 +327,11 @@ def main() -> int:
         if dup and name not in ALLOWED_DUP_EXPR:
             flags.append("DUP_EXPR(" + ",".join(t.rstrip("(") for t in dup) + ")")
         # shuffle exchanges only: BroadcastExchange/ReusedExchange are
-        # not shuffles, and exchanges inside InMemoryRelation build
-        # subtrees run once at cache materialization — neither consumes
-        # the recurring-shuffle budget
-        nex = live_exchanges(plan)
+        # not shuffles
+        nex = sum(
+            "Exchange" in line and "BroadcastExchange" not in line and "ReusedExchange" not in line
+            for line in plan.splitlines()
+        )
         budget = ALLOWED_EXCHANGES.get(name, args.max_exchanges)
         if nex > budget:
             flags.append(f"EXCHANGES>{budget}")
