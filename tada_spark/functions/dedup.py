@@ -13,12 +13,20 @@ Four tiers, cheapest first — the standard large-corpus pipeline:
 4. ngram_jaccard — exact verification on candidate pairs (or small
                  blocked sets): character-shingle Jaccard.
 
-Everything is Column-expression / join algebra — no UDFs — except
-connected_components, which finishes on the driver when the pair graph
-fits under the broadcast limit (an Arrow collect and numpy rounds, no
-Python workers). Oracle-checked ops (exact, jaccard) use md5 so the
-DuckDB twin computes identical values; MinHash uses JVM-native xxhash64
-(rows-only check) for speed.
+Everything is Column-expression / join algebra — no UDFs — except the
+driver finishes of jaccard_pairs and connected_components. Both follow
+one size rule, plans/semantics.collect_small: when the operator's input
+fits under spark.sql.autoBroadcastJoinThreshold (a row cap of the
+threshold over Spark's row-size estimate, and the threshold in Arrow
+bytes) it is collected as Arrow in one bounded pass and finished in
+Python/numpy on the driver, with no Python workers and the same rows
+and schema as the distributed plan; jaccard_pairs also holds its
+Python working set (shingle sets, candidate and output pairs) to the
+threshold. Above a cap that one bounded collect is wasted and the
+distributed plan runs. A threshold <= 0
+disables both driver paths. Oracle-checked ops (exact, jaccard) use md5
+so the DuckDB twin computes identical values; MinHash uses JVM-native
+xxhash64 (rows-only check) for speed.
 """
 
 from __future__ import annotations
@@ -27,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tada_spark.functions.text import char_shingles, fingerprint, word_shingles
-from tada_spark.plans.semantics import iterate, pin, round_det, unpin
+from tada_spark.plans.semantics import broadcast_limit, collect_small, iterate, pin, round_det, unpin
 from tada_spark.session import local_frame
 
 
@@ -322,11 +330,10 @@ def _banded_pairs(
     )
 
 
-# Spark's defaultSize of each id type the driver path takes (the row
-# width its broadcast-size estimate uses). Other id types (floats,
-# decimals, dates, timestamps, binary) take the distributed loop: their
-# NaN/-0.0 equality and Arrow time-zone round trip are not held to the
-# join's semantics here.
+# Spark's defaultSize of each id type the driver paths take. Other id
+# types (floats, decimals, dates, timestamps, binary) take the
+# distributed plans: their NaN/-0.0 equality and Arrow time-zone round
+# trip are not held to the join's semantics here.
 _ID_BYTES = {"tinyint": 1, "smallint": 2, "int": 4, "bigint": 8, "string": 20}
 
 
@@ -334,13 +341,7 @@ def _components_on_driver(
     pairs: DataFrame, id_a: str, id_b: str, max_iter: int
 ) -> DataFrame | None:
     """connected_components on the driver, or None if the pair list does
-    not fit under the broadcast limit. The row cap is
-    spark.sql.autoBroadcastJoinThreshold over Spark's size estimate for
-    one (id_a, id_b) row: 8 bytes of row overhead plus each id's
-    defaultSize. A threshold <= 0 disables the driver path, as it
-    disables broadcast joins. limit(cap + 1).toArrow() runs the pair
-    plan once, with the jobs a plain collect runs; limit().collect()
-    would add CollectLimit's incremental take, one job per scale-up.
+    not fit under the broadcast limit (``collect_small``'s rule).
 
     The rounds are the distributed loop's, in numpy over id ranks
     (sorted unique ids, so the min rank is the min id). A NULL id is a
@@ -349,13 +350,10 @@ def _components_on_driver(
     table, never a Python RDD."""
     sel = pairs.select(F.col(id_a), F.col(id_b))
     fa, fb = sel.schema.fields
-    width = _ID_BYTES.get(fa.dataType.simpleString())
-    limit = pairs.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if width is None or fa.dataType != fb.dataType or limit <= 0:
+    if fa.dataType.simpleString() not in _ID_BYTES or fa.dataType != fb.dataType:
         return None
-    cap = limit // (8 + 2 * width)
-    table = sel.limit(cap + 1).toArrow()
-    if table.num_rows > cap:
+    table = collect_small(sel)
+    if table is None:
         return None
 
     import numpy as np
@@ -418,14 +416,16 @@ def connected_components(
     `max_iter` meaning on both: at most `max_iter` rounds, and a
     RuntimeError if labels still changed in the last one.
 
-    Driver path: when the pair list fits under the broadcast limit —
-    spark.sql.autoBroadcastJoinThreshold bytes over Spark's estimate of
-    one pair row, read from the session conf — it is collected as Arrow
-    in one bounded pass and the rounds run in numpy (see
-    _components_on_driver). A near-dup graph is tiny next to its
-    corpus: near_dup_components at sf0.01 (114 pairs, 60 nodes, 4
-    rounds) builds in 9 jobs and 2 checkpoints this way, against 35
-    jobs and 7 checkpoints through the loop below. A threshold <= 0
+    Driver path: when the pair list fits under the broadcast limit
+    (``collect_small``: spark.sql.autoBroadcastJoinThreshold bytes over
+    Spark's estimate of one pair row, and at most the threshold in
+    Arrow bytes) it is collected as Arrow in one bounded pass and the
+    rounds run in numpy (see _components_on_driver). A near-dup graph
+    is tiny next to its corpus: near_dup_components at sf0.01 (114
+    pairs, 60 nodes, 4 rounds) builds in 2 jobs and no checkpoint with
+    jaccard_pairs on its driver path too, 9 jobs and 2 checkpoints over
+    the distributed jaccard_pairs, and 35 jobs and 7 checkpoints
+    through the loop below. A threshold <= 0
     disables this path, as it disables broadcast joins; integer and
     string ids only. Above the cap the bounded collect is one wasted
     pass over the pair plan before the loop starts.
@@ -673,6 +673,121 @@ def simhash_bands(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
+# Estimated Python heap of one shingle in a frozenset, before its 4
+# bytes per code point: a str header (76 bytes for non-ASCII text) and
+# its set slot. Measured on CPython 3.11 over sf0.1 docs, random ASCII
+# and random CJK text: 80-119 bytes per distinct 3- to 8-gram, against
+# 124-144 estimated.
+_SHINGLE_BYTES = 112
+
+
+def _jaccard_on_driver(
+    docs: DataFrame, ngram: int, threshold: float
+) -> DataFrame | None:
+    """jaccard_pairs on the driver, or None if its working set does not
+    fit under the broadcast limit. Four checks, each before the work it
+    bounds: the docs (the null-free jid, *blocks, __txt__ frame) fit
+    ``collect_small``'s rule; the distinct texts' shingle sets, at
+    ``_SHINGLE_BYTES + 4 × ngram`` bytes per shingle, fit the limit; the
+    candidate rep pairs, Σ n_b(n_b−1)/2 over each block's distinct
+    texts, plus the intra-group pairs, Σ m_g(m_g−1)/2 over each exact
+    duplicate group's members, fit it at 8 + 2 × the id width bytes per
+    pair (the limit connected_components' driver path puts on its own
+    input); and, while rep pairs expand to member pairs, the output rows
+    do too. Integer and string ids and block values only (``_ID_BYTES``).
+
+    The steps are the distributed plan's, in Python: exact duplicates
+    collapse on (block, text) to the min member id; shingle sets are
+    frozensets of ``text[i:i+n]`` over code points, which is Spark's
+    length/substring; the size-ratio prefilter, the floor-e6 rounding
+    and the threshold filter are the same IEEE operations on the same
+    integers; rep pairs expand to member pairs with least/greatest, and
+    intra-group pairs are 1.0 unless ``threshold > 1.0``."""
+    import math
+
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    fid, *fblocks, ftxt = docs.schema.fields
+    if (
+        ngram < 1
+        or ftxt.dataType != T.StringType()
+        or any(f.dataType.simpleString() not in _ID_BYTES for f in (fid, *fblocks))
+    ):
+        return None
+    table = collect_small(docs)
+    if table is None:
+        return None
+    limit = broadcast_limit(docs.sparkSession)
+    # one row per (block, text): exact duplicates share one shingle set
+    keys = table.column_names[1:]
+    groups = table.group_by(keys).aggregate([("jid", "list")]).select([*keys, "jid_list"])
+    n_shingles = pc.sum(
+        pc.max_element_wise(pc.subtract(pc.utf8_length(groups["__txt__"]), ngram - 1), 1)
+    ).as_py() or 0
+    if n_shingles * (_SHINGLE_BYTES + 4 * ngram) > limit:
+        return None
+    intra = not threshold > 1.0
+    blocks: dict[tuple, list] = {}
+    n_intra = 0
+    for *block, text, members in zip(*(c.to_pylist() for c in groups.columns)):
+        blocks.setdefault(tuple(block), []).append((text, sorted(members)))
+        n_intra += len(members) * (len(members) - 1) // 2 if intra else 0
+    n_pairs = sum(len(reps) * (len(reps) - 1) // 2 for reps in blocks.values())
+    cap = limit // (8 + 2 * _ID_BYTES[fid.dataType.simpleString()])
+    if n_pairs + n_intra > cap:
+        return None
+    lo = float(threshold) - 1e-6
+    ids_a, ids_b, jac = [], [], []
+    n_cross = 0
+    for reps in blocks.values():
+        # sorted by size, a set's prefilter partners are a run of its
+        # smaller neighbours: walk down until the size ratio fails
+        sets = sorted(
+            (
+                (frozenset(t[i : i + ngram] for i in range(max(len(t) - ngram + 1, 1))), m)
+                for t, m in reps
+            ),
+            key=lambda sm: len(sm[0]),
+        )
+        for i, (sb, mb) in enumerate(sets):
+            nb = len(sb)
+            for k in range(i - 1, -1, -1):
+                sa, ma = sets[k]
+                na = len(sa)
+                if na < lo * nb:
+                    break
+                if ma[0] == mb[0]:
+                    # equal rep ids never pass the join's a.jid < b.jid
+                    continue
+                inter = len(sa & sb)
+                j = math.floor(inter / (na + nb - inter) * 1e6 + 0.5) / 1e6
+                if j >= threshold:
+                    n_cross += len(ma) * len(mb)
+                    if n_cross + n_intra > cap:
+                        return None
+                    for x in ma:
+                        for y in mb:
+                            ids_a.append(min(x, y))
+                            ids_b.append(max(x, y))
+                            jac.append(j)
+            if intra:
+                for p, x in enumerate(mb):
+                    for y in mb[p + 1 :]:
+                        if x < y:
+                            ids_a.append(x)
+                            ids_b.append(y)
+                            jac.append(1.0)
+    schema = T.StructType(
+        [
+            T.StructField("id_a", fid.dataType, fid.nullable),
+            T.StructField("id_b", fid.dataType, fid.nullable),
+            T.StructField("jaccard", T.DoubleType(), True),
+        ]
+    )
+    return local_frame(docs.sparkSession, schema, [ids_a, ids_b, jac])
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -704,6 +819,20 @@ def jaccard_pairs(
     join's id inequality and block equality are NULL-false, so such
     docs never paired there either — and keeping them would let the
     NULL-grouping window fabricate pairs the oracle never emits.
+
+    Driver path: when the null-free docs fit under the broadcast limit
+    (``collect_small``) and so does the driver's working set — the
+    distinct texts' shingle sets, the candidate rep pairs plus the
+    intra-group pairs, and the output rows, each at an estimated size
+    per item (see _jaccard_on_driver) — the docs are collected as Arrow
+    in one bounded pass and the pairs are verified in Python, with the
+    distributed plan's rows and schema. Integer and string ids and
+    block values only; a threshold <= 0 disables the path. Above any
+    cap the bounded collect, and whatever Python work ran before the
+    cap was seen, is wasted before the distributed plan below runs. At
+    sf0.01 near_dup_components verifies 100 docs (1,230 candidate rep
+    pairs) this way in one collect, where the distributed plan ran 9
+    jobs and 2 pins.
     """
     from pyspark.sql.window import Window
 
@@ -721,6 +850,9 @@ def jaccard_pairs(
         *[F.col(c) for c in blocks],
         F.col(text_col).alias("__txt__"),
     )
+    small = _jaccard_on_driver(docs, ngram, threshold)
+    if small is not None:
+        return small
     grp = Window.partitionBy(*blocks, F.md5(F.col("__txt__")))
     # staged (r12): the rep-window table feeds SIX subtrees (both join
     # sides via sh, ma/mb member expansion, m1/m2 intra pairs). AQE

@@ -41,10 +41,6 @@ def token_count(col: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def word_shingles(col: Column, n: int = 3) -> Column:
     """n-word shingles (distinct) from whitespace tokens — the MinHash
     input unit. Empty/whitespace-only text yields NULL (split of ''

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -269,8 +269,11 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     (``sc.setCheckpointDir``), so it survives executor loss; otherwise
     local, and losing an executor that holds its blocks fails the next
     job that reads them (loudly — a pin never recomputes). Deployments
-    with executor churn set a checkpoint dir. A lazy pin materializes
-    in the first job that reads it; ``eager`` runs that job now."""
+    with executor churn set a checkpoint dir. A lazy pin writes its
+    blocks in the first job that reads them, but under AQE (on by
+    default) the call itself runs every shuffle and broadcast stage of
+    ``df``'s plan: only the last stage waits for a reader. ``eager``
+    runs that last stage now."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
@@ -284,6 +287,33 @@ def unpin(df: DataFrame) -> None:
     plan = df._jdf.queryExecution().analyzed()
     if plan.nodeName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+def broadcast_limit(spark: SparkSession) -> int:
+    """The session's spark.sql.autoBroadcastJoinThreshold in bytes;
+    <= 0 disables broadcast joins and every driver finish."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+
+
+def collect_small(df: DataFrame):
+    """``df`` as a pyarrow Table if it fits under the broadcast limit,
+    else None: the one size rule for operators that finish on the
+    driver. The row cap is the limit over Spark's size estimate for one
+    row, 8 bytes of overhead plus the schema's defaultSize, and the
+    collected table must also hold at most the limit in Arrow bytes. A
+    limit <= 0 returns None without running anything. Otherwise
+    ``limit(cap + 1).toArrow()`` runs ``df``'s plan once, with the jobs
+    a plain collect runs (``limit().collect()`` would add CollectLimit's
+    incremental take, one job per scale-up); above the cap that pass is
+    wasted and the caller runs its distributed plan."""
+    limit = broadcast_limit(df.sparkSession)
+    if limit <= 0:
+        return None
+    cap = limit // (8 + df._jdf.schema().defaultSize())
+    table = df.limit(cap + 1).toArrow()
+    if table.num_rows > cap or table.nbytes > limit:
+        return None
+    return table
 
 
 def iterate(

@@ -27,14 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: dtypes that carry a point on the timeline (date excluded)
-TS_TYPES = (T.TimestampType, T.TimestampNTZType)
-
-
-def is_timestamp(dtype: T.DataType) -> bool:
-    return isinstance(dtype, TS_TYPES)
-
-
 def ts_family(dtype: T.DataType) -> str | None:
     """'ltz' | 'ntz' | None."""
     if isinstance(dtype, T.TimestampNTZType):

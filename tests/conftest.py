@@ -19,24 +19,30 @@ def spark() -> SparkSession:
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# connected_components runs on the driver when the pair list fits under
-# spark.sql.autoBroadcastJoinThreshold, and in the distributed loop
-# otherwise; a threshold of -1 forces the loop.
-CC_PATHS = ("driver", "distributed")
+# connected_components and jaccard_pairs finish on the driver when
+# their input fits under spark.sql.autoBroadcastJoinThreshold
+# (plans/semantics.collect_small), and run their distributed plans
+# otherwise; a threshold of -1 forces the distributed plans.
+SIZE_PATHS = ("driver", "distributed")
 
 
 @contextmanager
-def cc_path(spark: SparkSession, path: str):
-    """Run connected_components on one of CC_PATHS inside the block;
-    the broadcast threshold is restored on exit."""
+def broadcast_threshold(spark: SparkSession, value: int | None):
+    """Set spark.sql.autoBroadcastJoinThreshold inside the block (None
+    keeps the session's); the threshold is restored on exit."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
-    if path == "distributed":
-        spark.conf.set(key, "-1")
+    if value is not None:
+        spark.conf.set(key, str(value))
     try:
         yield
     finally:
         spark.conf.set(key, saved)
+
+
+def size_path(spark: SparkSession, path: str):
+    """Run the size-ruled operators on one of SIZE_PATHS inside the block."""
+    return broadcast_threshold(spark, -1 if path == "distributed" else None)
 
 
 def held_rdds(spark: SparkSession) -> set[int]:

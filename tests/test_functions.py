@@ -7,6 +7,7 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
+from conftest import SIZE_PATHS, size_path
 from tada_spark.functions import dedup, multimodal, similarity, text
 
 
@@ -60,9 +61,11 @@ def test_jaccard_pairs(spark):
     df = spark.createDataFrame(
         [(1, "abcdefgh"), (2, "abcdefgx"), (3, "zzzzzzzz")], "doc_id long, text string"
     )
-    out = {(r.id_a, r.id_b): r.jaccard for r in dedup.jaccard_pairs(df, threshold=0.3).collect()}
-    assert (1, 2) in out and out[(1, 2)] > 0.5
-    assert (1, 3) not in out
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
+            out = {(r.id_a, r.id_b): r.jaccard for r in dedup.jaccard_pairs(df, threshold=0.3).collect()}
+        assert (1, 2) in out and out[(1, 2)] > 0.5, path
+        assert (1, 3) not in out, path
 
 
 def test_simhash_close_for_similar_texts(spark):
@@ -1342,12 +1345,13 @@ def test_near_dup_triangles_closes_wedges_only(spark, tmp_path):
     # pin the fixture's pair structure FIRST so the wedge claim is real:
     # edges (0,15) and (15,25) exist, (0,25) does not -> 0-15-25 is an
     # uncloseable wedge (likewise 5-15-25 since 5 duplicates 0)
-    pairs = {(r.id_a, r.id_b) for r in _dedup.jaccard_pairs(
-        df, block_cols=["lang"], ngram=4, threshold=0.35).collect()}
-    assert (0, 15) in pairs and (15, 25) in pairs
-    assert all((d, 25) not in pairs for d in (0, 5, 10))
-
-    tri = sorted((r.a, r.b, r.c) for r in near_dup_triangles(spark, str(tmp_path)).collect())
-    assert (0, 5, 10) in tri
-    assert (0, 5, 15) in tri              # 15's real triangle with the twins
-    assert all(20 not in t and 25 not in t for t in tri)  # wedges never close
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
+            pairs = {(r.id_a, r.id_b) for r in _dedup.jaccard_pairs(
+                df, block_cols=["lang"], ngram=4, threshold=0.35).collect()}
+            tri = sorted((r.a, r.b, r.c) for r in near_dup_triangles(spark, str(tmp_path)).collect())
+        assert (0, 15) in pairs and (15, 25) in pairs, path
+        assert all((d, 25) not in pairs for d in (0, 5, 10)), path
+        assert (0, 5, 10) in tri, path
+        assert (0, 5, 15) in tri, path         # 15's real triangle with the twins
+        assert all(20 not in t and 25 not in t for t in tri), path  # wedges never close

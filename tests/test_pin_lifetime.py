@@ -10,14 +10,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import cc_path, held_rdds
+from conftest import size_path, held_rdds
 
 
 def _components(spark):
     from tada_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
-    with cc_path(spark, "distributed"):
+    with size_path(spark, "distributed"):
         return connected_components(pairs)
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import size_path
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -577,9 +579,12 @@ def test_jaccard_salt_hash_evaluates_once(spark, catalog):
     # below the Project and re-evaluate pmod(xxhash64(jid), S) per row
     # in a Filter. The salt is now a stored column of the checkpointed
     # table, so the final plan must hold NO xxhash64-in-filter echo and
-    # no xxhash64 at all (it runs once, inside the staged build).
+    # no xxhash64 at all (it runs once, inside the staged build). The
+    # salts exist only in the distributed plan, so the test forces it.
     for name in ("jaccard_near_dups", "dedup_threshold_sweep_docs"):
-        plan = plan_of(catalog[name][0](spark, SF))
+        with size_path(spark, "distributed"):
+            plan = plan_of(catalog[name][0](spark, SF))
+        assert "__salt__" in plan, name  # the salted pair join is there
         assert "isnotnull(cast(pmod(xxhash64" not in plan
         assert "Filter isnotnull(pmod(xxhash64" not in plan
 

@@ -7,6 +7,8 @@ focused test when an optimization changes an operator's internals).
 
 import pytest
 
+from conftest import size_path
+
 
 # ---------------------------------------------------------------------------
 # _stream_state_partitions: Hadoop-FS sizing (r12 verdict item 2)
@@ -81,7 +83,8 @@ def _skewed_corpus():
 def test_jaccard_two_tier_salt_matches_blanket_salt(spark, monkeypatch):
     """The per-block salt factor is a pure execution detail: output must
     be row-for-row identical to the r12 blanket salt (env-forced) and
-    to the unsalted join (salt=1) on a skew-shaped corpus."""
+    to the unsalted join (salt=1) on a skew-shaped corpus. The salts
+    exist only in the distributed plan, so the test forces it."""
     from tada_spark.functions.dedup import jaccard_pairs
 
     df = _jaccard_rows(spark, _skewed_corpus())
@@ -91,8 +94,9 @@ def test_jaccard_two_tier_salt_matches_blanket_salt(spark, monkeypatch):
             monkeypatch.delenv("TADA_JACCARD_SALT", raising=False)
         else:
             monkeypatch.setenv("TADA_JACCARD_SALT", str(env))
-        out = jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3)
-        return sorted((r.id_a, r.id_b, r.jaccard) for r in out.collect())
+        with size_path(spark, "distributed"):
+            out = jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3)
+            return sorted((r.id_a, r.id_b, r.jaccard) for r in out.collect())
 
     two_tier = pairs(None)
     assert two_tier, "corpus must produce pairs for the test to bite"
@@ -214,8 +218,9 @@ def test_jaccard_salt_factor_is_per_block_in_plan(spark, monkeypatch):
 
     monkeypatch.delenv("TADA_JACCARD_SALT", raising=False)
     df = _jaccard_rows(spark, _skewed_corpus())
-    out = jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    with size_path(spark, "distributed"):
+        out = jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3)
+        plan = out._jdf.queryExecution().executedPlan().toString()
     # the a-side Generate explodes sequence(0, __sfac__ - 1): the bound
     # is the staged PER-BLOCK column, not the r12 round-constant
     assert "sequence(0, (__sfac__" in plan

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from tada_spark.plans.semantics import canon_str, py_canon
 
-from conftest import CC_PATHS, cc_path, held_rdds
+from conftest import SIZE_PATHS, size_path, held_rdds
 
 # ---------------------------------------------------------------------------
 # canon: TIMESTAMP_NTZ joins the LTZ branch (RFC3339 rendering)
@@ -229,8 +229,8 @@ def test_connected_components_chain_and_pair(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    for path in CC_PATHS:
-        with cc_path(spark, path):
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
             got = {
                 r["node"]: (r["component"], r["keep"])
                 for r in connected_components(pairs).collect()
@@ -250,15 +250,15 @@ def test_connected_components_no_convergence_raises(spark):
     from tada_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], ["id_a", "id_b"])
-    for path in CC_PATHS:
+    for path in SIZE_PATHS:
         for max_iter in (0, 1):
             before = held_rdds(spark)
-            with cc_path(spark, path), pytest.raises(RuntimeError, match="no convergence"):
+            with size_path(spark, path), pytest.raises(RuntimeError, match="no convergence"):
                 connected_components(pairs, max_iter=max_iter)
             assert held_rdds(spark) - before == set(), (path, max_iter)
 
 
-@pytest.mark.parametrize("path", CC_PATHS)
+@pytest.mark.parametrize("path", SIZE_PATHS)
 @pytest.mark.parametrize(
     "rows,id_type,want",
     [
@@ -282,7 +282,7 @@ def test_connected_components_null_and_string_ids(spark, path, rows, id_type, wa
     from tada_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
-    with cc_path(spark, path):
+    with size_path(spark, path):
         out = connected_components(pairs)
         got = [tuple(r) for r in out.collect()]
     assert sorted(got, key=str) == sorted(want, key=str)

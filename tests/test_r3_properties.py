@@ -11,7 +11,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from conftest import CC_PATHS, cc_path
+from conftest import SIZE_PATHS, size_path
 
 # ---------------------------------------------------------------------------
 # merge_session_batch ≡ single-pass session count over the sorted stream
@@ -105,8 +105,8 @@ def test_connected_components_equals_union_find(spark, seed):
         if a != b
     ]
     want = _union_find(pairs)
-    for path in CC_PATHS:
-        with cc_path(spark, path):
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
             got = {
                 r["node"]: r["component"]
                 for r in connected_components(

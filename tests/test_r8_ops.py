@@ -10,6 +10,8 @@ import math
 
 from pyspark.sql import functions as F
 
+from conftest import SIZE_PATHS, size_path
+
 
 def test_cms_estimate_unseen_key_is_zero(spark):
     """A probe key the build never saw must return est_n = 0 (absent
@@ -387,11 +389,13 @@ def test_jaccard_collapse_matches_naive_on_duplicate_heavy_corpus(spark):
         T.StructField("text", T.StringType()),
     ])
     df = spark.createDataFrame(rows, schema)
-    got = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3).collect()
-    )
-    assert got == _naive_jaccard(rows, 3, 0.3)
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
+            got = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3).collect()
+            )
+        assert got == _naive_jaccard(rows, 3, 0.3), path
 
 
 def test_jaccard_collapse_matches_naive_randomized(spark):
@@ -419,13 +423,15 @@ def test_jaccard_collapse_matches_naive_randomized(spark):
                 t = "".join(rng.choice("abc ") for _ in range(rng.randrange(0, 9)))
             rows.append((i, rng.choice(["en", "fr"]), t))
         df = spark.createDataFrame(rows, schema)
-        got = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in jaccard_pairs(
-                df, block_cols=["lang"], ngram=3, threshold=0.4
-            ).collect()
-        )
-        assert got == _naive_jaccard(rows, 3, 0.4), f"seed {seed}"
+        for path in SIZE_PATHS:
+            with size_path(spark, path):
+                got = sorted(
+                    (r.id_a, r.id_b, r.jaccard)
+                    for r in jaccard_pairs(
+                        df, block_cols=["lang"], ngram=3, threshold=0.4
+                    ).collect()
+                )
+            assert got == _naive_jaccard(rows, 3, 0.4), f"seed {seed} {path}"
 
 
 def test_jaccard_collapse_no_blocks(spark):
@@ -443,12 +449,14 @@ def test_jaccard_collapse_no_blocks(spark):
         T.StructField("text", T.StringType()),
     ])
     df = spark.createDataFrame(rows, schema)
-    got = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in jaccard_pairs(df, ngram=3, threshold=0.3).collect()
-    )
     want = _naive_jaccard([(i, "same", t) for i, _l, t in rows], 3, 0.3)
-    assert got == want
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
+            got = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in jaccard_pairs(df, ngram=3, threshold=0.3).collect()
+            )
+        assert got == want, path
 
 
 # ---------------------------------------------------------------------------
@@ -699,12 +707,14 @@ def test_jaccard_null_blocks_and_ids_never_pair(spark):
         (5, "en", "the quick brown fax"),
     ]
     df = spark.createDataFrame(rows, schema)
-    got = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3).collect()
-    )
-    # only the (4, 5) near-dup within the non-null 'en' block survives
-    assert [(a, b) for a, b, _j in got] == [(4, 5)]
+    for path in SIZE_PATHS:
+        with size_path(spark, path):
+            got = sorted(
+                (r.id_a, r.id_b, r.jaccard)
+                for r in jaccard_pairs(df, block_cols=["lang"], ngram=3, threshold=0.3).collect()
+            )
+        # only the (4, 5) near-dup within the non-null 'en' block survives
+        assert [(a, b) for a, b, _j in got] == [(4, 5)], path
 
 
 def test_ewma_null_order_keys_fold_last(spark):

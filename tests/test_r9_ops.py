@@ -310,7 +310,7 @@ def test_with_rowid_reliable_checkpoint_when_dir_configured(spark, tmp_path):
     identical results either way."""
     from pyspark.sql import functions as F
 
-    from conftest import cc_path
+    from conftest import size_path
     from tada_spark.functions.dedup import connected_components
     from tada_spark.functions.similarity import kcenter_select
     from tada_spark.plans.semantics import with_rowid
@@ -326,7 +326,7 @@ def test_with_rowid_reliable_checkpoint_when_dir_configured(spark, tmp_path):
     )
 
     def components():
-        with cc_path(spark, "distributed"):
+        with size_path(spark, "distributed"):
             return sorted(tuple(r) for r in connected_components(pairs).collect())
 
     runs = (

@@ -52,11 +52,6 @@ ALLOWED_EXCHANGES = {
     # + final pair dedupe; the shuffles replace a broadcast that would
     # recompute the bucket pipeline once per join side
     "embed_near_dup_pairs": 10,
-    # jaccard_pairs' in-operator exact-dup collapse (r8) adds the
-    # text-fingerprint window + member-expansion joins on top of the
-    # sweep's threshold explode/agg — those exchanges ARE the Σ cluster²
-    # mitigation (replica: >9 min naive → 26 s collapsed, SCALE.md)
-    "dedup_threshold_sweep_docs": 10,
 }
 
 #: Queries where a BroadcastNestedLoopJoin is the deliberate exact
